@@ -25,20 +25,42 @@ def backfill(df: DataFrame, defaults: dict[str, tuple[str, object]]) -> DataFram
     ``defaults`` maps column -> (spark type name, default value); default
     None produces a typed null (ids/names), 0 the metric backfill."""
     cols = set(df.columns)
-    for name, (typ, value) in defaults.items():
-        if name not in cols:
-            df = df.withColumn(name, F.lit(value).cast(typ))
-    return df
+    missing = {
+        name: F.lit(value).cast(typ)
+        for name, (typ, value) in defaults.items()
+        if name not in cols
+    }
+    return df.withColumns(missing) if missing else df
 
 
 def conform_select(df: DataFrame, wanted: list[str]) -> DataFrame:
     """Select the fixed column list, keeping only columns present, dropping
     extras, de-duplicating the list while preserving first-seen order."""
-    seen: dict[str, None] = {}
-    for c in wanted:
-        if c in df.columns and c not in seen:
-            seen[c] = None
-    return df.select(*seen)
+    cols = set(df.columns)
+    return df.select(*dict.fromkeys(c for c in wanted if c in cols))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def count_sql(expr: str) -> str:
+    """SQL: ``expr`` floored to a bigint, unparseable/NULL -> 0."""
+    return f"coalesce(CAST(floor(try_cast({expr} AS double)) AS bigint), 0)"
+
+
+def _replace_sql(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """Replace the named columns with SQL expressions in one ``selectExpr``
+    (one py4j call however many columns; column order kept)."""
+    if not exprs:
+        return df
+    return df.selectExpr(
+        *[
+            f"{exprs[c]} AS {quote_ident(c)}" if c in exprs else quote_ident(c)
+            for c in df.columns
+        ]
+    )
 
 
 def coerce_numeric(
@@ -50,28 +72,27 @@ def coerce_numeric(
 
     Monetary columns stay DoubleType (reference accepts FP money,
     SURVEY §7); count columns become LongType (pandas nullable Int64
-    analog, 0-backfilled)."""
-    out = df
+    analog, 0-backfilled).  A column in both lists is coerced as money
+    first, then as a count."""
+    cols = set(df.columns)
+    exprs: dict[str, str] = {}
     for c in monetary_cols:
-        if c in out.columns:
-            out = out.withColumn(
-                c, F.coalesce(F.col(c).try_cast("double"), F.lit(0.0))
-            )
+        if c in cols:
+            exprs[c] = f"coalesce(try_cast({exprs.get(c, quote_ident(c))} AS double), 0.0D)"
     for c in count_cols:
-        if c in out.columns:
-            out = out.withColumn(
-                c,
-                F.coalesce(
-                    F.floor(F.col(c).try_cast("double")).cast("long"), F.lit(0)
-                ),
-            )
-    return out
+        if c in cols:
+            exprs[c] = count_sql(exprs.get(c, quote_ident(c)))
+    return _replace_sql(df, exprs)
 
 
 def coerce_dates(df: DataFrame, cols: list[str]) -> DataFrame:
     """to_datetime(errors='coerce').dt.date equivalent: bad values -> null."""
-    out = df
-    for c in cols:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).cast("string").try_cast("date"))
-    return out
+    present = set(df.columns)
+    return _replace_sql(
+        df,
+        {
+            c: f"try_cast(CAST({quote_ident(c)} AS string) AS date)"
+            for c in cols
+            if c in present
+        },
+    )

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.conform import count_sql, quote_ident
+
 #: Whitelisted action columns (already '.'-sanitized), mirroring the
 #: reference's ALLOWED_ACTION_COLUMNS contract (transform.py:7-18).
 ALLOWED_ACTION_COLUMNS: tuple[str, ...] = (
@@ -57,18 +59,23 @@ NON_COUNT_COLS: tuple[str, ...] = (
 )
 
 
-def _sanitized_type(entry) -> F.Column:
-    """action_type with the '.' -> '_' sanitize (transform.py:35)."""
-    return F.regexp_replace(entry["action_type"], r"\.", "_")
+def _sql_str(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def action_value(actions_col: F.Column, sanitized_name: str) -> F.Column:
-    """Value of the LAST list entry whose sanitized type matches (the
-    reference's later-entries-overwrite semantics), as a raw string."""
-    matches = F.filter(
-        actions_col, lambda a: _sanitized_type(a) == F.lit(sanitized_name)
+def action_value_sql(actions_sql: str, sanitized_name: str) -> str:
+    """SQL for the value of the LAST list entry whose sanitized type matches
+    (the reference's later-entries-overwrite semantics), as a raw string.
+
+    The '.' -> '_' sanitize is a literal ``replace`` (pandas
+    ``str.replace('.', '_')``, transform.py:35).  Built as SQL text so the
+    whole pivot is one ``selectExpr`` call: a Python lambda for ``filter``
+    costs ~11 ms of py4j round trips per column at plan-build time."""
+    return (
+        f"element_at(filter({actions_sql}, a -> "
+        f"replace(a.action_type, '.', '_') = {_sql_str(sanitized_name)}), -1).value"
     )
-    return F.element_at(matches, -1)["value"]
 
 
 def normalize_actions_fixed(
@@ -81,16 +88,14 @@ def normalize_actions_fixed(
 
     Non-whitelisted action types are dropped — the whitelist projection the
     reference applies at final-column selection (transform.py:152)."""
-    acts = F.coalesce(
-        F.col(actions_col), F.array().cast("array<struct<action_type:string,value:string>>")
+    acts = (
+        f"coalesce({quote_ident(actions_col)}, "
+        "CAST(array() AS array<struct<action_type:string,value:string>>))"
     )
-    wide = df.select(
+    wide = df.selectExpr(
         "*",
         *[
-            F.coalesce(
-                F.floor(action_value(acts, name).try_cast("double")).cast("long"),
-                F.lit(0),
-            ).alias(name)
+            f"{count_sql(action_value_sql(acts, name))} AS {quote_ident(name)}"
             for name in whitelist
         ],
     )

@@ -17,10 +17,17 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import fingerprint_md5, tokens
+
+_log = logging.getLogger(__name__)
+
+#: ``spark.sql.shuffle.partitions``' built-in default
+_DEFAULT_SHUFFLE_PARTITIONS = "200"
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -57,10 +64,25 @@ def loop_shuffle_width(spark, n_rows: int, rows_per_partition: int = 1_000_000):
     interleaved A/B on the 284-edge CC-star fixture: ~5-10% of loop wall
     — modest locally, and the map-side fan-out saving grows with rounds
     × executors at cluster scale).
+
+    The width is set on the session conf for the loop's duration, so it
+    assumes the session runs one query at a time.  A configured width that
+    is not an integer (some platforms set ``auto``) is read as Spark's
+    default of 200, with a warning.
     """
     from ..session import scoped_conf
 
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    raw = spark.conf.get("spark.sql.shuffle.partitions", _DEFAULT_SHUFFLE_PARTITIONS)
+    try:
+        cur = int(raw)
+    except ValueError:
+        _log.warning(
+            "spark.sql.shuffle.partitions=%r is not an integer; loop shuffle "
+            "width is capped at Spark's default %s",
+            raw,
+            _DEFAULT_SHUFFLE_PARTITIONS,
+        )
+        cur = int(_DEFAULT_SHUFFLE_PARTITIONS)
     width = max(1, min(cur, n_rows // rows_per_partition + 1))
     return scoped_conf(
         spark, **{"spark.sql.shuffle.partitions": str(width)}

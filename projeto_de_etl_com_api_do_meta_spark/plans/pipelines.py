@@ -20,6 +20,7 @@ from ..functions.conform import (
     coerce_dates,
     coerce_numeric,
     conform_select,
+    quote_ident,
 )
 from ..functions.safe_math import safe_div
 from ..operators.actions_pivot import (
@@ -56,16 +57,17 @@ def _recalculate_metrics(df: DataFrame) -> DataFrame:
         "spend": "total_spend",
         "lead": "total_leads",
     }
-    out = df
-    for old, new in renames.items():
-        if old in out.columns:
-            out = out.withColumnRenamed(old, new)
-    if "total_successes" not in out.columns:
-        out = out.withColumn("total_successes", F.lit(0).cast("long"))
-    return (
-        out.withColumn("cpc", safe_div("total_spend", "total_clicks"))
-        .withColumn("cpl", safe_div("total_spend", "total_leads"))
-        .withColumn("ctr", safe_div("total_clicks", "total_impressions"))
+    derived = (
+        {} if "total_successes" in df.columns else {"total_successes": F.lit(0).cast("long")}
+    )
+    # withColumnsRenamed skips names the frame does not have
+    return df.withColumnsRenamed(renames).withColumns(
+        {
+            **derived,
+            "cpc": safe_div("total_spend", "total_clicks"),
+            "cpl": safe_div("total_spend", "total_leads"),
+            "ctr": safe_div("total_clicks", "total_impressions"),
+        }
     )
 
 
@@ -106,15 +108,16 @@ def run_campaign_performance(source: MetaRestSource) -> DataFrame:
     norm = _normalize(_with_arrival(source.read_insights(())))
     value_cols = [c for c in norm.columns if c not in _KEYS + ["_arrival"]]
     w = (
-        Window.partitionBy(*_KEYS)
-        .orderBy("_arrival")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        f"PARTITION BY {', '.join(_KEYS)} ORDER BY _arrival "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
     )
-    firsts = norm.select(
+    # one selectExpr: a Column-API window per value column costs py4j
+    # round trips per column at plan-build time
+    firsts = norm.selectExpr(
         *_KEYS,
         "_arrival",
         *[
-            F.first(c, ignorenulls=True).over(w).alias(c)
+            f"first({quote_ident(c)}, true) OVER ({w}) AS {quote_ident(c)}"
             for c in value_cols
         ],
     )
@@ -158,14 +161,13 @@ def run_lead_insights(source: MetaRestSource) -> DataFrame:
     geo_subset = conform_select(geo, ["region"] + _KEYS).distinct()
     joined = demo.join(geo_subset, on=_KEYS, how="full_outer")
 
+    fields = joined.schema.fields
     numeric_cols = [
-        f.name
-        for f in joined.schema.fields
-        if f.dataType.typeName() in ("long", "double", "integer")
+        f.name for f in fields if f.dataType.typeName() in ("long", "double", "integer")
     ]
     string_cols = [
         f.name
-        for f in joined.schema.fields
+        for f in fields
         if f.dataType.typeName() == "string" and f.name not in _KEYS
     ]
     filled = joined.na.fill(0, numeric_cols).na.fill("0", string_cols)
@@ -173,10 +175,7 @@ def run_lead_insights(source: MetaRestSource) -> DataFrame:
     final = _recalculate_metrics(filled)
     group_keys = _KEYS + ["age", "gender", "region"]
     final = conform_select(
-        final,
-        group_keys
-        + ["total_spend", "total_leads"]
-        + [c for c in ALLOWED_ACTION_COLUMNS if c in final.columns],
+        final, group_keys + ["total_spend", "total_leads", *ALLOWED_ACTION_COLUMNS]
     )
     return coerce_dates(final, ["date_start"])
 

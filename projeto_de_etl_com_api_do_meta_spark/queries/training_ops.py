@@ -1366,7 +1366,11 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # each stage's id set is reused by the next stage AND the tagged
     # count union below; persisting the (tiny, id-only) sets keeps the
-    # expensive LSH/shingle lineages from re-executing per branch
+    # expensive LSH/shingle lineages from re-executing per branch.
+    # localCheckpoint drops the lineage: on a cluster, losing an executor
+    # that holds one of these blocks fails the query instead of
+    # recomputing the block, so a run that loses an executor must be
+    # re-run (the query writes nothing, so a re-run is safe).
     q_ids = (
         gopher_metrics(docs)
         .where(F.col("keep") == 1)

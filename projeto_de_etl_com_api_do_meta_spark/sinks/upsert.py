@@ -10,9 +10,14 @@ The reference loads via staging-table + one set-based
   unit-tested; execution requires a live database (none in this
   environment), so ``write`` is import/connection-gated.
 - ``parquet_upsert`` — lakehouse variant: key-based merge into a parquet
-  target (read target ∖ batch keys, union batch, atomic swap).  Idempotent:
-  re-running the same batch is a no-op; used by the streaming foreachBatch
-  sink.  At scale the same call-shape maps onto Delta ``MERGE INTO``.
+  target.  The batch is deduplicated per key and, when a target exists,
+  materialized once (``localCheckpoint``); then target ∖ batch keys
+  (null-safe anti-join) ∪ batch is written and swapped in atomically.  The
+  batch plan — and the API fetch behind it — runs once per upsert, as
+  Delta's MERGE materializes its source.  Idempotent: re-running the same
+  batch is a no-op, and an empty batch does not rewrite the target; used
+  by the streaming foreachBatch sink.  At scale the same call-shape maps
+  onto Delta ``MERGE INTO``.
 
 Conflict keys per table follow load.py:49-63 (schemas.UPSERT_KEYS); JSONB
 casts follow load.py:77-91.
@@ -146,7 +151,21 @@ def parquet_upsert(
 
     Batch is deduplicated per key first (Delta MERGE's multi-match rule;
     keep-last by ``order_col`` when given, matching the reference's
-    last-write-wins upsert)."""
+    last-write-wins upsert).  Keys match null-safely (``<=>``): a batch row
+    whose key has a NULL replaces the target row with the same key.
+
+    Against an existing target the deduplicated batch is read once: it is
+    materialized with ``localCheckpoint`` and both the anti-join's key side
+    and the inserted rows come from that one copy.  So a batch plan (and a
+    live API behind it) runs once per upsert, and the keys removed from the
+    target are exactly the keys of the rows inserted.  An empty batch leaves
+    the target untouched.
+
+    ``localCheckpoint`` keeps the batch only in executor block storage,
+    without lineage: losing an executor that holds a block fails the upsert
+    instead of recomputing it.  The failure comes before the directory
+    swap, so the old table stays whole and a retry (the upsert is
+    idempotent) converges."""
     batch = _dedup_batch(batch, keys, order_col)
 
     if os.path.exists(target_path):
@@ -154,7 +173,17 @@ def parquet_upsert(
         missing = [c for c in target.columns if c not in batch.columns]
         if missing:
             raise ValueError(f"batch missing target columns: {missing}")
-        kept = target.join(batch.select(*keys).distinct(), on=keys, how="left_anti")
+        batch = batch.localCheckpoint(eager=True)
+        if batch.isEmpty():
+            return
+        # the deduplicated batch has one row per key (NULLs equal), so its
+        # key column set is already distinct
+        batch_keys = batch.select(*keys)
+        kept = target.join(
+            batch_keys,
+            on=[target[k].eqNullSafe(batch_keys[k]) for k in keys],
+            how="left_anti",
+        )
         merged = kept.select(*target.columns).unionByName(
             batch.select(*target.columns)
         )
@@ -192,8 +221,8 @@ def delta_available() -> bool:
 def delta_merge_condition(keys: list[str]) -> str:
     """The MERGE ON condition for a keyed upsert (pure; unit-tested
     without jars). Null-safe equality (``<=>``) so NULL key components
-    match themselves — same semantics parquet_upsert's left_anti join
-    gives for free."""
+    match themselves — the same key match parquet_upsert's anti-join
+    uses."""
     if not keys:
         raise ValueError("delta upsert requires at least one key column")
     return " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)

@@ -1,16 +1,22 @@
 """Meta-shaped REST source (SURVEY §2.1 S1-S4, §4 pushdown glue).
 
 Phase-1 architecture (sufficient at the reference's scale, SURVEY §7 M5):
-driver-side paginated fetch -> ``spark.createDataFrame(rows, explicit
-schema)``.  The *query spec* — fields (column pruning), filtering (predicate
-pushdown), time_range (partition pruning), level/breakdowns (aggregate
-pushdown) — is executed by the endpoint, exactly as the reference pushes it
-to Meta's servers (extract.py:125-128,199-207).
+driver-side paginated fetch -> an Arrow table built against the explicit
+schema contract -> ``spark.createDataFrame(table)``.  The rows are shipped
+to the JVM once as Arrow record batches, so every later scan of the frame
+runs in the JVM; a frame built from Python rows would start Python workers
+on each scan only to re-serialize rows the driver already holds.  The
+*query spec* — fields (column pruning), filtering (predicate pushdown),
+time_range (partition pruning), level/breakdowns (aggregate pushdown) — is
+executed by the endpoint, exactly as the reference pushes it to Meta's
+servers (extract.py:125-128,199-207).
 
 The correlated per-form leads scan (S3) runs as ``mapInPandas`` over a
 DataFrame of form ids: each partition issues its own transport calls, so at
 scale the fan-out is executor-parallel with no driver materialization
-(reference: a serial driver loop, extract.py:76-93).
+(reference: a serial driver loop, extract.py:76-93).  Each evaluation of
+the frame calls the API again; ``sinks.upsert.parquet_upsert`` reads its
+batch once, so one upsert makes one fetch per form.
 
 Transport is injectable: ``FakeMetaTransport`` serves deterministic fixture
 pages; a real facebook_business-backed transport would plug in the same
@@ -23,7 +29,10 @@ import math
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .. import schemas
 from . import meta_fixtures
@@ -115,6 +124,16 @@ _BREAKDOWN_SCHEMAS = {
     ("region",): schemas.RAW_INSIGHTS_GEO,
 }
 
+_FORMS = StructType().add("form_id", "string")
+
+
+def _rows_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Rows (dicts keyed by field name; absent keys are NULL) as a DataFrame
+    whose data lives in the JVM: one Arrow table built against ``schema``
+    and shipped once, partitions in row order."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
 
 class MetaRestSource:
     """Reads Meta-shaped edges into DataFrames with fixed schema contracts."""
@@ -139,7 +158,7 @@ class MetaRestSource:
             ],
         }
         rows = [r for page in self.transport.get_ads(AD_FIELDS, params) for r in page]
-        return self.spark.createDataFrame(rows, schema=schemas.RAW_ADS)
+        return _rows_frame(self.spark, rows, schemas.RAW_ADS)
 
     # -- S2: aggregated scan (extract.py:190-229) ----------------------------
     def read_insights(
@@ -157,14 +176,14 @@ class MetaRestSource:
             params["time_range"] = time_range
         pages = self.transport.get_insights(INSIGHT_FIELDS, params)
         rows = [r for page in pages for r in page]
-        return self.spark.createDataFrame(rows, schema=_BREAKDOWN_SCHEMAS[breakdowns])
+        return _rows_frame(self.spark, rows, _BREAKDOWN_SCHEMAS[breakdowns])
 
     # -- S3: correlated per-form scan, executor-parallel (extract.py:60-100) -
     def read_leads(self, time_range: dict | None = None) -> DataFrame:
         form_pages = self.transport.get_lead_gen_forms(["id"], {"limit": 100})
         form_ids = [r["id"] for page in form_pages for r in page]
-        forms_df = self.spark.createDataFrame(
-            [(f,) for f in form_ids], "form_id string"
+        forms_df = _rows_frame(
+            self.spark, [{"form_id": f} for f in form_ids], _FORMS
         ).repartition(max(1, min(len(form_ids), 8)), "form_id")
 
         transport = self.transport

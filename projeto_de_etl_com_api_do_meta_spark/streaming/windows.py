@@ -209,8 +209,7 @@ def foreach_batch_upsert(
     spark = streaming_df.sparkSession
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty micro-batch leaves an existing target as it is
         parquet_upsert(spark, batch_df, target_path, keys)
 
     return (

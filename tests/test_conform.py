@@ -34,6 +34,13 @@ def test_coerce_numeric_errors_coerce_semantics(spark):
     assert types == {"cnt": "bigint", "money": "double"}
 
 
+def test_coerce_numeric_column_in_both_lists_is_money_then_count(spark):
+    df = spark.createDataFrame([("2.7",), ("junk",)], "x string")
+    out = coerce_numeric(df, monetary_cols=["x"], count_cols=["x"])
+    assert dict(out.dtypes) == {"x": "bigint"}
+    assert [r.x for r in out.collect()] == [2, 0]
+
+
 def test_coerce_numeric_under_ansi(spark):
     prev = spark.conf.get("spark.sql.ansi.enabled")
     try:

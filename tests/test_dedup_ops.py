@@ -312,3 +312,34 @@ def test_jaccard_cap_auto_switch_point(spark):
         sat, threshold=0.0, cap_mode="absolute", cap_min=5
     )
     assert sat_pairs.count() == 0
+
+
+def test_loop_shuffle_width_tolerates_non_integer_conf(caplog):
+    """A platform-set ``auto`` width does not crash the loop helper: the
+    cap falls back to Spark's default 200 with a warning, and the conf is
+    restored on exit.  (A real session rejects ``auto`` for this conf, so
+    a stand-in session holds it.)"""
+    import logging
+    from types import SimpleNamespace
+
+    from projeto_de_etl_com_api_do_meta_spark.operators.dedup import (
+        loop_shuffle_width,
+    )
+
+    class Conf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+        def unset(self, key):
+            self.pop(key, None)
+
+    conf = Conf({"spark.sql.shuffle.partitions": "auto"})
+    spark = SimpleNamespace(conf=conf)
+    key = "spark.sql.shuffle.partitions"
+    with caplog.at_level(logging.WARNING):
+        with loop_shuffle_width(spark, n_rows=2_500_000):
+            assert conf[key] == "3"
+        with loop_shuffle_width(spark, n_rows=10**12):
+            assert conf[key] == "200"
+    assert conf[key] == "auto"
+    assert "not an integer" in caplog.text

@@ -111,3 +111,12 @@ def test_correlated_leads_scan(source):
     )
     dates = [r[0][:10] for r in windowed.select("created_time").collect()]
     assert dates and all("2024-03-01" <= d <= "2024-03-03" for d in dates)
+
+
+def test_source_frames_scan_without_python_workers(source):
+    """The ads and insights frames hold their rows in the JVM (Arrow batches
+    shipped once): scanning them starts no Python worker, so their RDD
+    lineage has no PythonRDD."""
+    for df in (source.read_ads(), source.read_insights(("region",))):
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -77,19 +77,68 @@ def test_union_by_name_column_order_invariance(spark, rows):
     assert sorted(map(tuple, u1)) == sorted(map(tuple, u2))
 
 
+#: action types as the API sends them: plain, dotted (sanitized to a
+#: whitelisted name), two spellings of one sanitized name, not whitelisted
+_ACTION_TYPES = [
+    "lead",
+    "link_click",
+    "link.click",
+    "comment",
+    "offsite_conversion.fb_pixel_lead",
+    "onsite_conversion.messaging_block",
+    "video.view.extra",
+]
+_PIVOT_WHITELIST = (
+    "lead",
+    "link_click",
+    "comment",
+    "offsite_conversion_fb_pixel_lead",
+    "onsite_conversion_messaging_block",
+)
+_action_value = st.one_of(
+    st.integers(-999, 999).map(str),
+    st.sampled_from(["N/A", "", "abc", "1x"]),
+    st.none(),
+)
+
+
+def _reference_pivot(acts):
+    """The reference's per-row loop (transform.py:22-39): sanitize '.' ->
+    '_', later entries overwrite earlier ones, then coerce (unparseable or
+    absent -> 0) and keep the whitelist."""
+    wide = {}
+    for action_type, value in acts or []:
+        wide[action_type.replace(".", "_")] = value
+    out = {}
+    for name in _PIVOT_WHITELIST:
+        try:
+            out[name] = int(wide.get(name))
+        except (TypeError, ValueError):
+            out[name] = 0
+    return out
+
+
 @given(
     rows=st.lists(
-        st.tuples(
-            st.integers(0, 9),
+        st.one_of(
+            st.none(),
             st.lists(
-                st.tuples(st.sampled_from(["lead", "link_click", "comment"]),
-                          st.integers(0, 999)),
-                max_size=3,
+                st.tuples(st.sampled_from(_ACTION_TYPES), _action_value),
+                max_size=5,
             ),
         ),
         min_size=1,
         max_size=8,
     )
+)
+@example(
+    rows=[
+        None,
+        [],
+        [("offsite_conversion.fb_pixel_lead", "3"), ("lead", "1"), ("lead", "5")],
+        [("link_click", "2"), ("link.click", "N/A"), ("comment", None)],
+        [("link.click", "7"), ("video.view.extra", "9"), ("comment", "")],
+    ]
 )
 @_SLOW
 def test_pivot_unpivot_round_trip(spark, rows):
@@ -97,27 +146,24 @@ def test_pivot_unpivot_round_trip(spark, rows):
         normalize_actions_fixed,
     )
 
-    whitelist = ("lead", "link_click", "comment")
     data = [
-        (rid, [{"action_type": t, "value": str(v)} for t, v in dict(acts).items()])
-        for rid, (rid2, acts) in enumerate((r[0], r[1]) for r in rows)
+        (rid, None if acts is None else [{"action_type": t, "value": v} for t, v in acts])
+        for rid, acts in enumerate(rows)
     ]
     df = spark.createDataFrame(
         data,
         "row_id long, actions array<struct<action_type:string,value:string>>",
     )
-    wide = normalize_actions_fixed(df, whitelist=whitelist)
+    wide = normalize_actions_fixed(df, whitelist=_PIVOT_WHITELIST)
     # Unpivot the widened metrics back to long form and compare with the
-    # original (0-filled) action map — pivot must lose nothing whitelisted.
-    stack_args = ", ".join(f"'{c}', {c}" for c in whitelist)
+    # reference's pivot of the same lists — pivot must lose nothing
+    # whitelisted.
+    stack_args = ", ".join(f"'{c}', {c}" for c in _PIVOT_WHITELIST)
     long = wide.select(
         "row_id",
-        F.expr(f"stack({len(whitelist)}, {stack_args}) AS (action_type, value)"),
+        F.expr(f"stack({len(_PIVOT_WHITELIST)}, {stack_args}) AS (action_type, value)"),
     )
-    got = {
-        (r.row_id, r.action_type): r.value for r in long.collect()
-    }
-    for rid, (_, acts) in enumerate((r[0], r[1]) for r in rows):
-        m = dict(acts)
-        for t in whitelist:
-            assert got[(rid, t)] == m.get(t, 0)
+    got = {}
+    for r in long.collect():
+        got.setdefault(r.row_id, {})[r.action_type] = r.value
+    assert got == {rid: _reference_pivot(acts) for rid, acts in enumerate(rows)}

@@ -33,25 +33,82 @@ def test_merge_sql_jsonb_casts():
 
 
 def _read(spark, path):
-    return {
-        (r.k,): (r.v, r.ts) for r in spark.read.parquet(path).collect()
-    }
+    rows = spark.read.parquet(path).collect()
+    keys = [r.k for r in rows]
+    assert len(keys) == len(set(keys)), f"duplicate keys: {sorted(map(str, keys))}"
+    return {(r.k,): (r.v, r.ts) for r in rows}
 
 
 def test_parquet_upsert_insert_update_idempotent(spark, tmp_path):
     target = os.path.join(str(tmp_path), "t")
-    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], "k int, v string, ts int")
+    b1 = spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 1), (None, "n", 1)], "k int, v string, ts int"
+    )
     parquet_upsert(spark, b1, target, keys=["k"])
-    assert _read(spark, target) == {(1,): ("a", 1), (2,): ("b", 1)}
+    assert _read(spark, target) == {(1,): ("a", 1), (2,): ("b", 1), (None,): ("n", 1)}
 
-    # update 2, insert 3
-    b2 = spark.createDataFrame([(2, "B", 2), (3, "c", 2)], "k int, v string, ts int")
+    # update 2 and the NULL key (keys match null-safely), insert 3
+    b2 = spark.createDataFrame(
+        [(2, "B", 2), (3, "c", 2), (None, "N", 2)], "k int, v string, ts int"
+    )
     parquet_upsert(spark, b2, target, keys=["k"])
-    assert _read(spark, target) == {(1,): ("a", 1), (2,): ("B", 2), (3,): ("c", 2)}
+    want = {(1,): ("a", 1), (2,): ("B", 2), (3,): ("c", 2), (None,): ("N", 2)}
+    assert _read(spark, target) == want
 
     # idempotency: merge(merge(T, d), d) == merge(T, d)
     parquet_upsert(spark, b2, target, keys=["k"])
-    assert _read(spark, target) == {(1,): ("a", 1), (2,): ("B", 2), (3,): ("c", 2)}
+    assert _read(spark, target) == want
+
+
+def test_parquet_upsert_empty_batch_leaves_target_untouched(spark, tmp_path):
+    target = os.path.join(str(tmp_path), "t")
+    schema = "k int, v string, ts int"
+    parquet_upsert(spark, spark.createDataFrame([(1, "a", 1)], schema), target, ["k"])
+
+    def files():
+        return {
+            name: (st.st_ino, st.st_mtime_ns)
+            for name in os.listdir(target)
+            for st in [os.stat(os.path.join(target, name))]
+        }
+
+    before = (os.stat(target).st_ino, files())
+    parquet_upsert(spark, spark.createDataFrame([], schema), target, ["k"])
+    assert (os.stat(target).st_ino, files()) == before
+    assert _read(spark, target) == {(1,): ("a", 1)}
+
+
+def test_parquet_upsert_fetches_each_lead_form_once(spark, tmp_path):
+    """One upsert evaluates its batch once: the correlated leads scan calls
+    the API once per form, with or without an existing target."""
+    from projeto_de_etl_com_api_do_meta_spark.plans.pipelines import run_raw_leads
+    from projeto_de_etl_com_api_do_meta_spark.schemas import UPSERT_KEYS
+    from projeto_de_etl_com_api_do_meta_spark.sources.meta_rest import (
+        FakeMetaTransport,
+        MetaRestSource,
+    )
+
+    log = str(tmp_path / "get_leads.log")
+
+    # defined locally so it is pickled by value to the executors' Python
+    # workers; the calls are counted in a file because each worker holds
+    # its own copy of the transport
+    class CountingTransport(FakeMetaTransport):
+        def get_leads(self, form_id, fields, params):
+            with open(log, "a") as fh:
+                fh.write(form_id + "\n")
+            return super().get_leads(form_id, fields, params)
+
+    source = MetaRestSource(spark, CountingTransport())
+    forms = sorted(
+        r["id"] for page in source.transport.get_lead_gen_forms(["id"], {}) for r in page
+    )
+    target = str(tmp_path / "ads_raw_leads")
+    for _ in range(2):  # insert into a new target, then merge into it
+        open(log, "w").close()
+        parquet_upsert(spark, run_raw_leads(source), target, UPSERT_KEYS["ads_raw_leads"])
+        with open(log) as fh:
+            assert sorted(fh.read().split()) == forms
 
 
 def test_parquet_upsert_batch_dedup_keep_last(spark, tmp_path):
