@@ -34,21 +34,11 @@ from projeto_de_etl_com_api_do_meta_spark.queries.registry import (  # noqa: E40
 )
 from projeto_de_etl_com_api_do_meta_spark.session import get_spark  # noqa: E402
 
-#: Headline queries benchmarked each round (subset of the full registry:
-#: the heaviest representatives of each operator family).
+#: Headline queries: the heaviest representative of each operator family.
+#: The set stays small so the one stdout JSON line fits the consumer's
+#: ~2000-char parse window (``main`` fails the run above 1800 chars).  Why
+#: each entry joined or left the set is recorded in SCALE.md.
 HEADLINE: tuple[str, ...] = (
-    # r6 prune: thirteen sub-0.6s entries (join_scd2_point_in_time,
-    # q6_forecast_revenue, agg_rollup_region_nation, window_topk_per_group,
-    # events_sessionize_30m, text_doc_stats, text_fingerprint_winnow,
-    # corpus_top_bigrams, sample_hash_split, join_salted_skew,
-    # agg_skew_safe_distinct, warehouse_incremental_agg_merge,
-    # events_session_window_builtin, text_gopher_quality_rules,
-    # web_line_dedup_rebuild, dedup_cross_source_priority,
-    # text_c4_line_rules) left the headline set: their timings were
-    # shared-session noise at this magnitude, and the stdout metric line
-    # must stay inside the consumer's ~2000-char parse window. They remain
-    # registry queries with correctness rows; the bench tracks each
-    # family's HEAVIEST representative.
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q10_returned_items",
@@ -61,13 +51,6 @@ HEADLINE: tuple[str, ...] = (
     "join_full_outer_fanout",
     "events_incremental_rollup",
     "agg_udaf_pandas",  # first pandas-exec query: absorbs Python worker spin-up
-    # r8 prune (VERDICT r7 item 4): eight more sub-second entries rotated
-    # out (dedup_exact_docs, text_substring_dup_spans, train_sft_chat_flatten,
-    # multimodal_clip_pair_filter, embed_covariance_matrix,
-    # agg_kmv_distinct_sketch, corpus_bm25_search, embed_kmeans_lloyd) —
-    # the stdout JSON line must stay well inside the driver's ~2000-char
-    # parse window even WITH an "isolated" section attached; each family's
-    # heaviest representative stays.
     "dedup_containment_pairs",
     "text_decontaminate_bloom",
     "dedup_minhash_lsh",
@@ -79,95 +62,29 @@ HEADLINE: tuple[str, ...] = (
     "stream_tumbling_daily",
     "stream_stream_join_clicks",
     "stream_chained_windows",
-    # scale-path variants tracked round-over-round (VERDICT r2 item 7):
-    # the capped/prefix/salted/incremental forms are what actually runs at
-    # 100 TB, so their timings matter as much as the exact paths'.
     "dedup_ngram_jaccard_capped",
     "dedup_containment_prefix_filter",
     "embed_ann_lsh_md5",
     "embed_ann_srp_md5",
-    # round-3 session additions (corpus-scale north-stars):
     "text_bigram_perplexity",
-    # round-4 additions: the end-to-end curation funnel (flagship
-    # composition) and the per-stage ops it introduced
     "pipeline_training_funnel",
     "dedup_semantic_clustered",
-    # late round-4: the remaining curation entry points (C4 line battery,
-    # source-priority duplicate resolution)
-    # round-5: the SemDeDup k-proportional scale path (r4 verdict item 2)
-    # and its two-level composition (no flat centroid broadcast at all)
     "dedup_semantic_clustered_scaled",
     "dedup_semantic_twolevel_scaled",
-    # round-5 continuation: ranked retrieval + importance-based selection,
-    # corpus-relative perplexity bucketing, SFT flattening
     "sample_dsir_importance",
-    # round-6: lakehouse MERGE (full DML path incl. table build), exact
-    # Kneser-Ney model build, integer-exact covariance, KMV sketching,
-    # CLIP-style pair gating
     "lakehouse_merge_upsert",
     "pipeline_rag_funnel",
-    # round-7: the heaviest new family representatives — real-JPEG codec
-    # round-trip (Arrow-batched Python), late-interaction MaxSim (64
-    # chunk-cosines in one codegen projection), Poisson-bootstrap CI
-    # (x200 replicate fan-out, exact-integer combine)
     "multimodal_jpeg_roundtrip",
     "ml_bootstrap_ci_poisson",
-    # round-8: recomposed CC north star (capped pair generator), the NB
-    # classifier (heaviest new vocab-scale aggregate), inverted-index
-    # tf-idf retrieval, iterative k-core peeling
     "dedup_cluster_components_star",
     "ml_naive_bayes_lang",
     "corpus_tfidf_cosine_search",
     "graph_kcore_peel",
-    # late r8: pipeline_sft_funnel and text_kneser_ney_bigram rotated out
-    # at 0.55/0.74 s — their families stay covered by
-    # pipeline_training_funnel / text_bigram_perplexity.  r9: the two r8
-    # ml additions (ml_permutation_test_md5 0.64s, ml_chi2_feature_selection
-    # 0.60s) rotate out in turn — the ml family keeps its two heaviest reps
-    # (ml_bootstrap_ci_poisson, ml_naive_bayes_lang) and the worst-case
-    # stdout line returns inside the 1800-char budget after the PNG/FLAC
-    # codec entries joined the set.
-    # multimodal_g711_roundtrip measured 0.49s at sf0.1 — below the
-    # family-heaviest rule (multimodal_jpeg_roundtrip stays the rep) and
-    # the worst-case line budget; tracked via SCALE_PROBE_r08 instead
-    # round-9: the two new REAL lossless codecs (PNG via stdlib DEFLATE,
-    # FLAC via fixed predictors + Rice), both Arrow-batched Python.
-    # dedup_embedding_ivf_md5 measured 11.8s but stays OUT of the set: at
-    # fixture scale (N=2000, nlist=8) its candidate set is ~80% of all
-    # pairs — a correctness twin exercising the pair generator, not a
-    # perf representative (embed_ann_ivf remains the IVF family rep).
     "multimodal_flac_roundtrip",
-    # round-9b/c: the two heaviest new family representatives — WebDataset
-    # tar-shard archive IO (applyInPandas write + binaryFile member walk;
-    # the new archive family's only member) and the co-occurrence SVD word
-    # embedding (corpus-scale bigram aggregate + vocab^2 integer matvec).
-    # To hold the worst-case stdout line under the 1800-char guard, two
-    # sub-second r7/r9 entries rotate out by the family-heaviest rule:
-    # multimodal_png_roundtrip 0.64s (jpeg 1.31 + flac 1.15 keep the
-    # family) and retrieval_colbert_maxsim 0.69s (tfidf search 1.55 +
-    # rag funnel 1.36 keep retrieval).  The other 16 r9b-e ops measured
-    # sub-second-to-2s at sf0.1 and stay registry-only: geo kNN under the
-    # join family's fanout rep, QOI/GIF under JPEG/FLAC, RANSAC/pinball/
-    # stump under the bounded-spine ml stats.
     "io_tar_shard_roundtrip",
     "corpus_cooc_svd_embedding",
-    # round-10: the two heaviest new family representatives — the sharded
-    # Misra-Gries fold (per-shard HOF sketch + merge audit; the sketch
-    # family's first fold-based member) and the trigram-TF cosine posting
-    # join (fraction-capped candidate generation; heaviest new dedup rep).
-    # er_blocking_quality is a composition of this plus the prefix
-    # blocker, so the cosine rep covers its cost axis; DTW/BMP/ZIP and
-    # the stats battery measured sub-2s at sf0.1 and stay registry-only.
-    # To hold the 1800-char stdout guard, two sub-second entries rotate
-    # out by the family-heaviest rule: train_shuffle_epochs 0.86s (train
-    # family keeps pipeline_training_funnel) and text_ccnet_perplexity_
-    # buckets 0.97s (text keeps bigram_perplexity + decontaminate_bloom).
     "corpus_misra_gries_sharded",
     "dedup_tf_cosine_pairs",
-    # r10 session 2: the string-distance ER join (Arrow-batched JW over
-    # blocked candidates, 4.8s at sf0.1) is the heaviest new family rep;
-    # DL shares its candidate generator, geo/stats/codec additions all
-    # measured sub-3s and stay registry-only per the family-heaviest rule.
     "er_jaro_winkler_pairs",
 )
 

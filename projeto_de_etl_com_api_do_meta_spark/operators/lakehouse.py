@@ -30,12 +30,15 @@ row-group skipping work unchanged on the listed files.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -68,6 +71,59 @@ def _write_files(df: DataFrame, table_dir: str, n: int) -> list[str]:
     )
 
 
+def _footer_stats(
+    files: list[str], cols: tuple[str, ...]
+) -> dict[str, dict[str, list]]:
+    """Per-file min/max for ``cols`` from the parquet footers alone.
+
+    Raises ``_FooterStatsUnusable`` naming the file and column when a
+    footer cannot be read or lacks exact, JSON-clean bounds for a column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out: dict[str, dict[str, list]] = {}
+    for f in files:
+        try:
+            out[f] = _file_footer_stats(f, pq.ParquetFile(f).metadata, cols)
+        except (OSError, pa.ArrowException) as e:  # unreadable/corrupt footer
+            raise _FooterStatsUnusable(f, ", ".join(cols), repr(e)) from e
+    return out
+
+
+def _file_footer_stats(f: str, md, cols: tuple[str, ...]) -> dict[str, list]:
+    names = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    fstats: dict[str, list] = {}
+    for c in cols:
+        idx = names.get(c)
+        if idx is None or md.num_rows == 0:
+            continue  # no stats: the file is always kept
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            col = md.row_group(rg).column(idx)
+            if col.num_values == 0:
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                raise _FooterStatsUnusable(f, c, "no min/max")
+            mn, mx = st.min, st.max
+            if not (
+                isinstance(mn, (str, int, float))
+                and isinstance(mx, (str, int, float))
+            ):
+                raise _FooterStatsUnusable(
+                    f, c, f"{type(mn).__name__} bounds are not JSON-clean"
+                )
+            # A row group holding a NaN records it as a bound, and a Python
+            # min/max fold over NaN depends on the order, so the file's
+            # range could come out too narrow.
+            if mn != mn or mx != mx:
+                raise _FooterStatsUnusable(f, c, "NaN bound")
+            lo = mn if lo is None else min(lo, mn)
+            hi = mx if hi is None else max(hi, mx)
+        fstats[c] = [lo, hi]
+    return fstats
+
+
 def _column_stats(
     spark: SparkSession, files: list[str], cols: tuple[str, ...]
 ) -> dict[str, dict[str, list]]:
@@ -86,51 +142,18 @@ def _column_stats(
     column for temporal stats.
 
     Fallback: any file/column whose footer lacks usable stats (older
-    writer, exotic type) falls back to the original grouped read-back
-    scan for ALL files — one Spark job, exact, keyed by
-    ``input_file_name``."""
+    writer, exotic type, a NaN bound) logs a warning naming it and falls
+    back to the original grouped read-back scan for ALL files — one Spark
+    job, exact, keyed by ``input_file_name``."""
     try:
-        import pyarrow.parquet as pq
-
-        out: dict[str, dict[str, list]] = {}
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            names = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            fstats: dict[str, list] = {}
-            for c in cols:
-                idx = names.get(c)
-                if idx is None:
-                    continue
-                lo = hi = None
-                ok = md.num_rows > 0
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(idx)
-                    if col.num_values == 0:
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        ok = False
-                        break
-                    mn, mx = st.min, st.max
-                    if not (
-                        isinstance(mn, (str, int, float))
-                        and isinstance(mx, (str, int, float))
-                    ):
-                        ok = False  # bytes/date/…: not JSON-clean
-                        break
-                    lo = mn if lo is None else min(lo, mn)
-                    hi = mx if hi is None else max(hi, mx)
-                if not ok:
-                    raise _FooterStatsUnusable(f, c)
-                fstats[c] = [lo, hi]
-            out[f] = fstats
-        return out
-    except _FooterStatsUnusable:
-        pass
-    except Exception:  # noqa: BLE001 — missing pyarrow, foreign fs, ...
-        pass
+        return _footer_stats(files, cols)
+    except _FooterStatsUnusable as e:
+        _log.warning(
+            "footer stats unusable (%s); computing min/max of %d file(s) "
+            "with an exact scan",
+            e,
+            len(files),
+        )
     aggs = [F.min(c).alias(f"min_{c}") for c in cols] + [
         F.max(c).alias(f"max_{c}") for c in cols
     ]
@@ -156,6 +179,9 @@ def _column_stats(
 
 class _FooterStatsUnusable(Exception):
     """A footer lacked exact, JSON-clean min/max for a requested column."""
+
+    def __init__(self, path: str, column: str, reason: str):
+        super().__init__(f"{path}, column {column}: {reason}")
 
 
 class CommitConflict(Exception):

@@ -444,11 +444,12 @@ ORDER BY p.doc_a, p.doc_b
 def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
-    base = spread(docs, "doc_id").where(F.size(tokens("text")) >= 3)
     # persist so the exact side (sizes + self-join) and the signature
     # aggregate physically share ONE shingling pass — an unpersisted df
-    # would recompute the dominant per-row cost once per consumer
-    sh = base.select(
+    # would recompute the dominant per-row cost once per consumer.  No
+    # size(tokens) >= 3 pre-filter: as in md5_lsh_signatures, explode
+    # already drops the empty shingle array of a doc below 3 tokens.
+    sh = spread(docs, "doc_id").select(
         "doc_id", F.explode(word_shingles("text", 3)).alias("s")
     ).persist()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))

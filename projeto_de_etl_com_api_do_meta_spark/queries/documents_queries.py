@@ -2213,7 +2213,7 @@ ORDER BY doc_id
         "item 5): on anti-correlated objectives the local frontiers do "
         "not shrink and the close is O(k^2) dominance evaluations over "
         "k candidates — measured on a pure anti-chain "
-        "(tools/probe_skyline_antichain.py, SCALE_PROBE_r08): k=5k 8.3s, "
+        "(SCALE_PROBE_r08): k=5k 8.3s, "
         "20k 22.6s, 60k 228s on 32 cores. The operator therefore counts "
         "candidates (one cheap agg over the persisted local frontiers) "
         "and raises past 100k instead of running an unbounded quadratic; "

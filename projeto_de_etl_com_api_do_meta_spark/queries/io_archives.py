@@ -9,7 +9,10 @@ shard level).  This module implements both halves Spark-first:
 
 * WRITE: ``applyInPandas`` grouped by a deterministic shard key — each
   group builds ONE tar via stdlib ``tarfile`` with pinned metadata
-  (mtime=0, uid/gid=0) so shard bytes are bit-reproducible.
+  (mtime=0, uid/gid=0).  Shard bytes are bit-reproducible only for a
+  fixed shard count, and that count is ``max(8, defaultParallelism)``:
+  a session with another parallelism assigns documents to different
+  shards.
 * READ: ``spark.read.format("binaryFile")`` over the shard files, then an
   Arrow-batched ``mapInPandas`` unpacks members back into (doc_id, text,
   metadata) rows — one task per shard, exactly the WebDataset access
@@ -61,8 +64,9 @@ FROM documents GROUP BY lang ORDER BY lang
         "WebDataset-style tar-shard round-trip: documents are packed into "
         "max(8, defaultParallelism) deterministic tar shards "
         "(doc_id-keyed member pairs "
-        "{key}.txt + {key}.json, stdlib tarfile, pinned mtime/uid so "
-        "shard bytes are reproducible) by ONE applyInPandas group per "
+        "{key}.txt + {key}.json, stdlib tarfile, pinned mtime/uid, so "
+        "shard bytes are reproducible for a fixed shard count, i.e. a "
+        "fixed defaultParallelism) by ONE applyInPandas group per "
         "shard, read back through binaryFile + an Arrow-batched "
         "mapInPandas member walk, and audited per-lang against the "
         "source table (doc counts, metadata char sums, DECODED text "

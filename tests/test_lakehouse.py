@@ -569,3 +569,52 @@ def test_merge_into_retry_merges_against_winners_snapshot(spark, tmp_path):
         lh._publish = real_publish
     got = {(r.k, r.v) for r in lh.read_version(spark, table, v).collect()}
     assert got == {(1, "a2"), (9, "z")}, "winner's rows must survive the merge"
+
+
+def test_nan_footer_bound_does_not_prune_matching_rows(spark, tmp_path):
+    """A row group holding a NaN records max=NaN in its footer; the file's
+    range must not be folded down to an earlier row group's max."""
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import (
+        read_version_pruned,
+    )
+
+    table = str(tmp_path / "t")
+    df = spark.range(40001).selectExpr(
+        "IF(id < 40000, CAST(id AS DOUBLE), CAST('NaN' AS DOUBLE)) AS x"
+    ).coalesce(1)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", "4096")  # many small row groups
+    try:
+        commit_version(df, table, stats_cols=("x",))
+    finally:
+        if old is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", old)
+    got = read_version_pruned(spark, table, "x", 39900.0, 39998.0).count()
+    exact = read_version(spark, table).where(F.col("x").between(39900.0, 39998.0))
+    assert got == exact.count() == 99
+
+
+def test_unusable_footer_stats_fall_back_with_a_warning(spark, tmp_path, caplog):
+    """A date column's footer bounds are not JSON-clean: the exact scan
+    takes over, and the fallback is logged with the file and column."""
+    import datetime
+    import logging
+
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import (
+        _column_stats,
+    )
+
+    out = str(tmp_path / "d")
+    spark.createDataFrame(
+        [(datetime.date(2024, 1, 3),), (datetime.date(2024, 1, 1),)], "d date"
+    ).coalesce(1).write.parquet(out)
+    (path,) = [
+        os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
+    ]
+    with caplog.at_level(logging.WARNING):
+        stats = _column_stats(spark, [path], ("d",))
+    assert stats == {path: {"d": [datetime.date(2024, 1, 1), datetime.date(2024, 1, 3)]}}
+    assert f"{path}, column d" in caplog.text

@@ -21,6 +21,16 @@ def test_oracle_keys_subset_of_query_keys():
     assert len(q) >= 40
 
 
+def test_query_order_puts_oracle_backed_first():
+    """The external driver scores entries in iteration order and stops after
+    ~50; a rows-only entry cannot earn a hash match, so none may come before
+    an oracle-backed one.  The counts pin the registry's size."""
+    names, oracles = list(queries_map()), oracle_sql_map()
+    has_oracle = [n in oracles for n in names]
+    assert has_oracle == sorted(has_oracle, reverse=True)
+    assert (len(names), len(oracles)) == (595, 577)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_runs_at_smoke_sf(spark, sf_dir, name):
     df = QUERIES[name].fn(spark, sf_dir)
