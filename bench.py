@@ -117,17 +117,27 @@ def main() -> None:
     # operators persist (e.g. IVF centroid assignments) so queries can't
     # degrade each other through executor memory pressure.  A query that
     # raises is recorded in "errors" instead of zeroing the whole artifact.
+    # Each rep's generated classes compiled (and their compile ms) go to
+    # the side artifact: a rep 2 that still compiles means the session's
+    # code cache did not keep the query's classes.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    codegen: dict[str, list[dict]] = {}
+    compiled = _codegen_counter(spark)
     for name in names:
         best = float("inf")
         try:
             for _ in range(2):
                 spark.catalog.clearCache()
+                n0, ms0 = compiled()
                 t0 = time.time()
                 df = QUERIES[name].fn(spark, sf_dir)
                 df.count()
                 best = min(best, time.time() - t0)
+                n1, ms1 = compiled()
+                codegen.setdefault(name, []).append(
+                    {"classes": n1 - n0, "compile_ms": round(ms1 - ms0, 1)}
+                )
             timings[name] = round(best, 3)
         except Exception as exc:
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
@@ -145,6 +155,7 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
+    out["codegen"] = codegen
 
     # r4 verdict item 5: auto-confirm flagged cross-round regressions in
     # ISOLATION inside this round's own artifact. Any query >25% slower
@@ -216,7 +227,9 @@ def main() -> None:
     # drained first, and the line is emitted as one atomic os.write.
     with open(os.path.join(_REPO_ROOT, "BENCH_LOCAL.json"), "w") as f:
         f.write(json.dumps(out, indent=1) + "\n")
-    slim = {k: v for k, v in out.items() if k != "isolated_detail"}
+    slim = {
+        k: v for k, v in out.items() if k not in ("isolated_detail", "codegen")
+    }
     # 2dp per-query on stdout (3dp lives in BENCH_LOCAL.json): sub-10ms
     # precision is run-to-run noise, and the chars matter here.
     slim["queries"] = {k: round(v, 2) for k, v in slim["queries"].items()}
@@ -240,6 +253,15 @@ def main() -> None:
     time.sleep(0.2)  # let the JVM's async stderr writers finish
     sys.stdout.flush()
     os.write(sys.stdout.fileno(), (line + "\n").encode())
+
+
+def _codegen_counter(spark):
+    """A reader of (classes compiled, Janino compile ms) so far in the
+    session's JVM, from Spark's ``CodegenMetrics`` and ``CodeGenerator``."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return lambda: (hist.getCount(), gen.compileTime() / 1e6)
 
 
 def _latest_prev_bench() -> dict | None:

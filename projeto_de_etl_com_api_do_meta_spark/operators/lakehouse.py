@@ -31,12 +31,15 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _log = logging.getLogger(__name__)
 
@@ -61,14 +64,51 @@ def versions(table_dir: str) -> list[int]:
     return sorted(out)
 
 
-def _write_files(df: DataFrame, table_dir: str, n: int) -> list[str]:
+#: column types whose min/max are JSON numbers or strings in a manifest
+_STATS_TYPES = (
+    T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+    T.LongType, T.FloatType, T.DoubleType,
+)
+
+
+def _check_stats_cols(df: DataFrame, stats_cols: tuple[str, ...]) -> None:
+    """Reject, before any file is written, a stats column whose bounds a
+    manifest cannot hold (a date, timestamp, decimal or binary column)."""
+    if not stats_cols:
+        return
+    types = {f.name: f.dataType for f in df.schema.fields}
+    for c in stats_cols:
+        t = types.get(c)
+        if t is not None and not isinstance(t, _STATS_TYPES):
+            raise ValueError(
+                f"stats column {c!r} is {t.simpleString()}: its bounds are not "
+                "JSON; use a string date or an epoch column for temporal stats"
+            )
+
+
+def _write_files(df: DataFrame, table_dir: str, n: int) -> tuple[str, list[str]]:
+    """Write ``df`` under a fresh ``data/v{n}-*`` dir; returns the dir and
+    its parquet files.  A failed write leaves no dir behind."""
     data_dir = os.path.join(table_dir, "data", f"v{n}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(data_dir)
-    return sorted(
+    try:
+        df.write.mode("error").parquet(data_dir)
+    except BaseException:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        raise
+    return data_dir, sorted(
         os.path.join(data_dir, f)
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
     )
+
+
+def _bounds(lo, hi) -> list | None:
+    """``[lo, hi]`` as a manifest entry, or ``None`` (no bound: the file is
+    always kept) when a bound is NaN or infinite, which JSON cannot hold."""
+    for b in (lo, hi):
+        if isinstance(b, float) and not math.isfinite(b):
+            return None
+    return [lo, hi]
 
 
 def _footer_stats(
@@ -115,12 +155,13 @@ def _file_footer_stats(f: str, md, cols: tuple[str, ...]) -> dict[str, list]:
                 )
             # A row group holding a NaN records it as a bound, and a Python
             # min/max fold over NaN depends on the order, so the file's
-            # range could come out too narrow.
-            if mn != mn or mx != mx:
-                raise _FooterStatsUnusable(f, c, "NaN bound")
+            # range could come out too narrow: such a file gets no bound.
+            if _bounds(mn, mx) is None:
+                break
             lo = mn if lo is None else min(lo, mn)
             hi = mx if hi is None else max(hi, mx)
-        fstats[c] = [lo, hi]
+        else:
+            fstats[c] = [lo, hi]
     return fstats
 
 
@@ -141,10 +182,13 @@ def _column_stats(
     JSON-representable (string/int/float); use a string date or epoch
     column for temporal stats.
 
+    A file whose column holds a NaN or an infinity gets no bound for it
+    (JSON has no such numbers), so it is always kept.
+
     Fallback: any file/column whose footer lacks usable stats (older
-    writer, exotic type, a NaN bound) logs a warning naming it and falls
-    back to the original grouped read-back scan for ALL files — one Spark
-    job, exact, keyed by ``input_file_name``."""
+    writer, exotic type) logs a warning naming it and falls back to the
+    original grouped read-back scan for ALL files — one Spark job, exact,
+    keyed by ``input_file_name``."""
     try:
         return _footer_stats(files, cols)
     except _FooterStatsUnusable as e:
@@ -171,7 +215,9 @@ def _column_stats(
             while path.startswith("//"):
                 path = path[1:]
         by_path[path] = {
-            c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols
+            c: rng
+            for c in cols
+            if (rng := _bounds(r[f"min_{c}"], r[f"max_{c}"])) is not None
         }
     # keys must match the manifest's file paths exactly
     return {f: by_path.get(f, {}) for f in files}
@@ -206,7 +252,7 @@ def _publish(
     fd, tmp = tempfile.mkstemp(dir=md, suffix=".tmp")
     try:
         with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
+            json.dump(manifest, f, allow_nan=False)
         try:
             # The commit point: hard-link is create-if-absent (EEXIST when
             # the name is taken), unlike os.rename's last-writer-wins
@@ -216,8 +262,41 @@ def _publish(
         except FileExistsError as e:
             raise CommitConflict(f"v{n} already committed") from e
     finally:
-        os.unlink(tmp)
+        # nothing may raise once the link exists: callers delete the data
+        # of a commit that raised, and a stray .tmp is never read
+        try:
+            os.unlink(tmp)
+        except OSError:
+            pass
     return n
+
+
+def _commit_rewrite(
+    df: DataFrame,
+    table_dir: str,
+    n: int,
+    carried: list[str],
+    carried_stats: dict[str, dict[str, list]],
+    stats_cols: tuple[str, ...],
+) -> int | None:
+    """One copy-on-write attempt: write ``df`` as the new files of version
+    ``n``, next to the ``carried`` files of the previous version, and
+    publish.  Returns ``None`` when another writer took ``n``.  The new
+    files are deleted unless the publish succeeds: a retry rewrites them
+    from the winner's snapshot."""
+    _check_stats_cols(df, stats_cols)
+    data_dir, new_files = _write_files(df, table_dir, n)
+    try:
+        stats = dict(carried_stats)
+        if stats_cols:
+            stats.update(_column_stats(df.sparkSession, new_files, stats_cols))
+        return _publish(table_dir, n, carried + new_files, stats=stats or None)
+    except CommitConflict:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        return None
+    except BaseException:
+        shutil.rmtree(data_dir, ignore_errors=True)
+        raise
 
 
 def _manifest(table_dir: str, version: int) -> dict:
@@ -247,20 +326,28 @@ def commit_version(
 
     ``stats_cols`` records per-file min/max for those columns in the
     manifest (data skipping via ``read_version_pruned``), same contract as
-    ``commit_append``.
+    ``commit_append``.  A stats column of a type whose bounds JSON cannot
+    hold raises ``ValueError`` before anything is written, and a commit that
+    fails for any reason but a lost race deletes the files it wrote.
     """
-    files = None
+    _check_stats_cols(df, stats_cols)
+    data_dir = None
     stats: dict[str, dict[str, list]] = {}
-    while True:
-        n = (versions(table_dir)[-1] + 1) if versions(table_dir) else 1
-        if files is None:
-            files = _write_files(df, table_dir, n)
-            if stats_cols:
-                stats = _column_stats(df.sparkSession, files, stats_cols)
-        try:
-            return _publish(table_dir, n, files, stats=stats or None)
-        except CommitConflict:
-            continue
+    try:
+        while True:
+            n = (versions(table_dir)[-1] + 1) if versions(table_dir) else 1
+            if data_dir is None:
+                data_dir, files = _write_files(df, table_dir, n)
+                if stats_cols:
+                    stats = _column_stats(df.sparkSession, files, stats_cols)
+            try:
+                return _publish(table_dir, n, files, stats=stats or None)
+            except CommitConflict:
+                continue
+    except BaseException:
+        if data_dir is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        raise
 
 
 def commit_append(
@@ -291,31 +378,41 @@ def commit_append(
 
     Losing a concurrent-version race retries the whole read-check-publish
     round: the base file list and the txn_id scan are recomputed against
-    the winner's manifest before publishing at the next number."""
-    new_files = None
+    the winner's manifest before publishing at the next number.
+    ``stats_cols`` are checked, and a failed commit cleaned up, as in
+    ``commit_version``."""
+    _check_stats_cols(df, stats_cols)
+    data_dir = None
     new_stats: dict[str, dict[str, list]] = {}
-    while True:
-        vs = versions(table_dir)
-        if txn_id is not None:
-            if txn_id in _retired_txns(table_dir):
-                return vs[-1] if vs else 0
-            for v in vs:
-                if _manifest(table_dir, v).get("txn_id") == txn_id:
-                    return v
-        n = (vs[-1] + 1) if vs else 1
-        if new_files is None:
-            new_files = _write_files(df, table_dir, n)
-            if stats_cols:
-                new_stats = _column_stats(df.sparkSession, new_files, stats_cols)
-        prev_manifest = _manifest(table_dir, vs[-1]) if vs else {}
-        prev = prev_manifest.get("files", [])
-        stats = {**prev_manifest.get("stats", {}), **new_stats} or None
-        try:
-            return _publish(
-                table_dir, n, prev + new_files, txn_id=txn_id, stats=stats
-            )
-        except CommitConflict:
-            continue
+    try:
+        while True:
+            vs = versions(table_dir)
+            if txn_id is not None:
+                if txn_id in _retired_txns(table_dir):
+                    return vs[-1] if vs else 0
+                for v in vs:
+                    if _manifest(table_dir, v).get("txn_id") == txn_id:
+                        return v
+            n = (vs[-1] + 1) if vs else 1
+            if data_dir is None:
+                data_dir, new_files = _write_files(df, table_dir, n)
+                if stats_cols:
+                    new_stats = _column_stats(
+                        df.sparkSession, new_files, stats_cols
+                    )
+            prev_manifest = _manifest(table_dir, vs[-1]) if vs else {}
+            prev = prev_manifest.get("files", [])
+            stats = {**prev_manifest.get("stats", {}), **new_stats} or None
+            try:
+                return _publish(
+                    table_dir, n, prev + new_files, txn_id=txn_id, stats=stats
+                )
+            except CommitConflict:
+                continue
+    except BaseException:
+        if data_dir is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        raise
 
 
 def pruned_files(
@@ -523,18 +620,11 @@ def delete_where(
         if not candidates:  # nothing overlaps: no-op, not an error
             return n - 1
         survivors = spark.read.parquet(*candidates).where(keep_pred)
-        new_files = _write_files(survivors, table_dir, n)
-        prev_manifest = _manifest(table_dir, n - 1)
-        prev_stats = prev_manifest.get("stats", {})
+        prev_stats = _manifest(table_dir, n - 1).get("stats", {})
         stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        if stats_cols:
-            stats.update(_column_stats(spark, new_files, stats_cols))
-        try:
-            return _publish(
-                table_dir, n, untouched + new_files, stats=stats or None
-            )
-        except CommitConflict:
-            continue
+        v = _commit_rewrite(survivors, table_dir, n, untouched, stats, stats_cols)
+        if v is not None:
+            return v
 
 
 def update_where(
@@ -575,17 +665,11 @@ def update_where(
                 for c in cand.columns
             ]
         )
-        new_files = _write_files(updated, table_dir, n)
         prev_stats = _manifest(table_dir, n - 1).get("stats", {})
         stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        if stats_cols:
-            stats.update(_column_stats(spark, new_files, stats_cols))
-        try:
-            return _publish(
-                table_dir, n, untouched + new_files, stats=stats or None
-            )
-        except CommitConflict:
-            continue
+        v = _commit_rewrite(updated, table_dir, n, untouched, stats, stats_cols)
+        if v is not None:
+            return v
 
 
 def optimize_table(
@@ -620,14 +704,9 @@ def optimize_table(
             )
         else:
             df = df.repartition(target_files)
-        new_files = _write_files(df, table_dir, n)
-        stats = (
-            _column_stats(spark, new_files, stats_cols) if stats_cols else None
-        )
-        try:
-            return _publish(table_dir, n, new_files, stats=stats)
-        except CommitConflict:
-            continue
+        v = _commit_rewrite(df, table_dir, n, [], {}, stats_cols)
+        if v is not None:
+            return v
 
 
 def merge_into(
@@ -705,14 +784,8 @@ def merge_into(
             )
         else:
             rewritten = upserts
-        new_files = _write_files(rewritten, table_dir, n)
         prev_stats = _manifest(table_dir, n - 1).get("stats", {})
         stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        if stats_cols:
-            stats.update(_column_stats(spark, new_files, stats_cols))
-        try:
-            return _publish(
-                table_dir, n, untouched + new_files, stats=stats or None
-            )
-        except CommitConflict:
-            continue
+        v = _commit_rewrite(rewritten, table_dir, n, untouched, stats, stats_cols)
+        if v is not None:
+            return v

@@ -618,3 +618,66 @@ def test_unusable_footer_stats_fall_back_with_a_warning(spark, tmp_path, caplog)
         stats = _column_stats(spark, [path], ("d",))
     assert stats == {path: {"d": [datetime.date(2024, 1, 1), datetime.date(2024, 1, 3)]}}
     assert f"{path}, column d" in caplog.text
+
+
+def test_non_json_stats_column_is_rejected_before_any_write(spark, tmp_path):
+    """A date stats column cannot go into a manifest: the commit raises a
+    ValueError naming the column, and leaves no version and no data dir."""
+    import datetime
+
+    table = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, datetime.date(2024, 1, 1))], "k long, d date")
+    commit_version(df.select("k"), table)
+    for commit in (commit_version, commit_append):
+        with pytest.raises(ValueError, match="'d'"):
+            commit(df, table, stats_cols=("d",))
+        assert versions(table) == [1]
+        assert [d[:3] for d in os.listdir(os.path.join(table, "data"))] == ["v1-"]
+
+
+def test_failed_publish_removes_the_written_files(spark, tmp_path):
+    """A commit whose publish fails (here: the manifest dir is a file)
+    deletes the data it wrote instead of leaving an orphan ``data/v*``."""
+    table = str(tmp_path / "t")
+    os.makedirs(table)
+    open(os.path.join(table, "_manifests"), "w").close()
+    with pytest.raises(OSError):
+        commit_version(_df(spark, [(1, "a")]), table)
+    assert os.listdir(os.path.join(table, "data")) == []
+
+
+def test_nan_and_infinite_bounds_keep_the_manifest_strict_json(spark, tmp_path):
+    """A file whose stats column holds a NaN or an infinity records no bound
+    for it (so it is always kept); the manifest stays valid JSON, on the
+    footer path and on the exact-scan fallback alike."""
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import (
+        _column_stats,
+        read_version_pruned,
+    )
+
+    def strict(text):
+        def no_constant(c):
+            raise ValueError(f"not JSON: {c}")
+
+        return json.loads(text, parse_constant=no_constant)
+
+    table = str(tmp_path / "t")
+    schema = "x double, d date"
+    rows = [(float(i), None) for i in range(10)]
+    commit_append(spark.createDataFrame(rows, schema).select("x").coalesce(1),
+                  table, stats_cols=("x",))
+    special = [(float("nan"), None), (4.0, None), (float("inf"), None)]
+    commit_append(spark.createDataFrame(special, schema).select("x").coalesce(1),
+                  table, stats_cols=("x",))
+    with open(os.path.join(table, "_manifests", "v2.json")) as f:
+        stats = strict(f.read())["stats"]
+    assert sorted(len(s) for s in stats.values()) == [0, 1]
+    for lo, hi in ((3.0, 5.0), (100.0, 200.0)):
+        got = sorted(r.x for r in read_version_pruned(spark, table, "x", lo, hi).collect())
+        exact = read_version(spark, table).where(F.col("x").between(lo, hi))
+        assert got == sorted(r.x for r in exact.collect())
+    # the exact scan (forced by the date column's footer) drops them too
+    out = str(tmp_path / "raw")
+    spark.createDataFrame(special, schema).coalesce(1).write.parquet(out)
+    (path,) = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
+    assert "x" not in _column_stats(spark, [path], ("x", "d"))[path]
