@@ -17,9 +17,15 @@ commits and time travel — are a manifest protocol, not a file format:
   on. Two concurrent writers racing for version N cannot overwrite
   each other: the loser sees the conflict and retries at N+1.
 
-This is deliberately the minimal subset: append/overwrite commits and
-reads. MERGE on top of it is ``sinks/upsert.py: parquet_upsert``
-composed with ``commit_version`` (read latest -> merge -> commit).
+On top of it sit the write verbs: ``commit_version`` (overwrite) and
+``commit_append`` (with an idempotent ``txn_id``) share one write-once /
+publish-retry loop; the copy-on-write verbs ``delete_where``,
+``update_where``, ``optimize_table`` and ``merge_into`` share another
+(``_rewrite_files``), which rewrites only the files the manifest stats
+cannot rule out and carries the rest over by reference.  Each verb
+supplies only its row rewrite.  ``merge_into``'s rows come from
+``sinks/upsert.py: keyed_merge``, the keyed MERGE core ``parquet_upsert``
+also calls, so both sinks match composite keys null-safely.
 
 Scale notes: manifests hold file PATHS (one JSON line per file, ~100
 bytes), never data; a 100 TB table's manifest is megabytes. Readers pass
@@ -140,9 +146,13 @@ def _file_footer_stats(f: str, md, cols: tuple[str, ...]) -> dict[str, list]:
         lo = hi = None
         for rg in range(md.num_row_groups):
             col = md.row_group(rg).column(idx)
-            if col.num_values == 0:
-                continue
             st = col.statistics
+            if col.num_values == 0 or (
+                st is not None
+                and st.has_null_count
+                and st.null_count == col.num_values
+            ):
+                continue  # no values, or only NULLs: nothing to bound
             if st is None or not st.has_min_max:
                 raise _FooterStatsUnusable(f, c, "no min/max")
             mn, mx = st.min, st.max
@@ -271,34 +281,6 @@ def _publish(
     return n
 
 
-def _commit_rewrite(
-    df: DataFrame,
-    table_dir: str,
-    n: int,
-    carried: list[str],
-    carried_stats: dict[str, dict[str, list]],
-    stats_cols: tuple[str, ...],
-) -> int | None:
-    """One copy-on-write attempt: write ``df`` as the new files of version
-    ``n``, next to the ``carried`` files of the previous version, and
-    publish.  Returns ``None`` when another writer took ``n``.  The new
-    files are deleted unless the publish succeeds: a retry rewrites them
-    from the winner's snapshot."""
-    _check_stats_cols(df, stats_cols)
-    data_dir, new_files = _write_files(df, table_dir, n)
-    try:
-        stats = dict(carried_stats)
-        if stats_cols:
-            stats.update(_column_stats(df.sparkSession, new_files, stats_cols))
-        return _publish(table_dir, n, carried + new_files, stats=stats or None)
-    except CommitConflict:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        return None
-    except BaseException:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise
-
-
 def _manifest(table_dir: str, version: int) -> dict:
     with open(os.path.join(_manifest_dir(table_dir), f"v{version}.json")) as f:
         return json.load(f)
@@ -310,6 +292,50 @@ def manifest_files(table_dir: str, version: int) -> list[str]:
     if version not in vs:
         raise FileNotFoundError(f"version {version} not in {vs}")
     return _manifest(table_dir, version)["files"]
+
+
+def _commit_new_files(
+    df: DataFrame,
+    table_dir: str,
+    stats_cols: tuple[str, ...],
+    append: bool,
+    txn_id: str | None = None,
+) -> int:
+    """Write ``df`` once and publish it as the next version, retrying the
+    publish at the next number after a lost race.  An ``append`` lists the
+    previous version's files (and carries their stats) before the new ones;
+    a ``txn_id`` already in the log makes the call a no-op.  Both are
+    re-read on every attempt, against the winner's manifest."""
+    _check_stats_cols(df, stats_cols)
+    data_dir = None
+    new_stats: dict[str, dict[str, list]] = {}
+    try:
+        while True:
+            vs = versions(table_dir)
+            if txn_id is not None:
+                if txn_id in _retired_txns(table_dir):
+                    return vs[-1] if vs else 0
+                for v in vs:
+                    if _manifest(table_dir, v).get("txn_id") == txn_id:
+                        return v
+            n = (vs[-1] + 1) if vs else 1
+            if data_dir is None:
+                data_dir, new_files = _write_files(df, table_dir, n)
+                if stats_cols:
+                    new_stats = _column_stats(
+                        df.sparkSession, new_files, stats_cols
+                    )
+            prev = _manifest(table_dir, vs[-1]) if append and vs else {}
+            stats = {**prev.get("stats", {}), **new_stats} or None
+            files = prev.get("files", []) + new_files
+            try:
+                return _publish(table_dir, n, files, txn_id=txn_id, stats=stats)
+            except CommitConflict:
+                continue
+    except BaseException:
+        if data_dir is not None:
+            shutil.rmtree(data_dir, ignore_errors=True)
+        raise
 
 
 def commit_version(
@@ -330,24 +356,7 @@ def commit_version(
     hold raises ``ValueError`` before anything is written, and a commit that
     fails for any reason but a lost race deletes the files it wrote.
     """
-    _check_stats_cols(df, stats_cols)
-    data_dir = None
-    stats: dict[str, dict[str, list]] = {}
-    try:
-        while True:
-            n = (versions(table_dir)[-1] + 1) if versions(table_dir) else 1
-            if data_dir is None:
-                data_dir, files = _write_files(df, table_dir, n)
-                if stats_cols:
-                    stats = _column_stats(df.sparkSession, files, stats_cols)
-            try:
-                return _publish(table_dir, n, files, stats=stats or None)
-            except CommitConflict:
-                continue
-    except BaseException:
-        if data_dir is not None:
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise
+    return _commit_new_files(df, table_dir, stats_cols, append=False)
 
 
 def commit_append(
@@ -381,38 +390,7 @@ def commit_append(
     the winner's manifest before publishing at the next number.
     ``stats_cols`` are checked, and a failed commit cleaned up, as in
     ``commit_version``."""
-    _check_stats_cols(df, stats_cols)
-    data_dir = None
-    new_stats: dict[str, dict[str, list]] = {}
-    try:
-        while True:
-            vs = versions(table_dir)
-            if txn_id is not None:
-                if txn_id in _retired_txns(table_dir):
-                    return vs[-1] if vs else 0
-                for v in vs:
-                    if _manifest(table_dir, v).get("txn_id") == txn_id:
-                        return v
-            n = (vs[-1] + 1) if vs else 1
-            if data_dir is None:
-                data_dir, new_files = _write_files(df, table_dir, n)
-                if stats_cols:
-                    new_stats = _column_stats(
-                        df.sparkSession, new_files, stats_cols
-                    )
-            prev_manifest = _manifest(table_dir, vs[-1]) if vs else {}
-            prev = prev_manifest.get("files", [])
-            stats = {**prev_manifest.get("stats", {}), **new_stats} or None
-            try:
-                return _publish(
-                    table_dir, n, prev + new_files, txn_id=txn_id, stats=stats
-                )
-            except CommitConflict:
-                continue
-    except BaseException:
-        if data_dir is not None:
-            shutil.rmtree(data_dir, ignore_errors=True)
-        raise
+    return _commit_new_files(df, table_dir, stats_cols, append=True, txn_id=txn_id)
 
 
 def pruned_files(
@@ -578,6 +556,56 @@ def read_version(
     return reader.parquet(*manifest["files"])
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    table_dir: str,
+    prune: tuple | None,
+    rewrite,
+    stats_cols: tuple[str, ...],
+    inserts: bool = False,
+) -> int:
+    """The copy-on-write commit loop of DELETE, UPDATE, OPTIMIZE and MERGE.
+
+    Each attempt splits the latest version's files into candidates and
+    untouched files, by the manifest stats for ``prune`` = ``(col, lo,
+    hi)`` (``pruned_files``), or with every file a candidate when ``prune``
+    is ``None``.  ``rewrite`` gets the candidates' rows as one frame and
+    returns the rows that replace them; these are committed next to the
+    untouched files, which carry over by reference with their stats.  With
+    no candidates the verb is a no-op returning the current version, unless
+    it ``inserts`` rows of its own (MERGE): then ``rewrite`` gets ``None``.
+
+    Losing a commit race deletes the attempt's files and re-runs it against
+    the winner's snapshot: re-publishing a rewrite of a stale snapshot would
+    silently drop the concurrent writer's rows.  Any other failure deletes
+    the attempt's files and raises."""
+    if not versions(table_dir):
+        raise FileNotFoundError(f"no committed versions in {table_dir}")
+    while True:
+        base = versions(table_dir)[-1]
+        if prune is None:
+            candidates, untouched = manifest_files(table_dir, base), []
+        else:
+            candidates, untouched = pruned_files(table_dir, base, *prune)
+        if not candidates and not inserts:
+            return base
+        df = rewrite(spark.read.parquet(*candidates) if candidates else None)
+        _check_stats_cols(df, stats_cols)
+        prev_stats = _manifest(table_dir, base).get("stats", {})
+        stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
+        data_dir, new_files = _write_files(df, table_dir, base + 1)
+        try:
+            if stats_cols:
+                stats.update(_column_stats(spark, new_files, stats_cols))
+            return _publish(
+                table_dir, base + 1, untouched + new_files, stats=stats or None
+            )
+        except BaseException as e:
+            shutil.rmtree(data_dir, ignore_errors=True)
+            if not isinstance(e, CommitConflict):
+                raise
+
+
 def delete_where(
     spark: SparkSession,
     table_dir: str,
@@ -609,22 +637,11 @@ def delete_where(
     a layout-dependent data loss (ADVICE r5 #1).  A delete whose range
     overlaps no files is a no-op and returns the CURRENT version.
     """
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
     match = F.col(col).between(F.lit(lo), F.lit(hi))
     keep_pred = ~match | F.col(col).isNull()
-    while True:
-        n = versions(table_dir)[-1] + 1
-        candidates, untouched = pruned_files(table_dir, n - 1, col, lo, hi)
-        if not candidates:  # nothing overlaps: no-op, not an error
-            return n - 1
-        survivors = spark.read.parquet(*candidates).where(keep_pred)
-        prev_stats = _manifest(table_dir, n - 1).get("stats", {})
-        stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        v = _commit_rewrite(survivors, table_dir, n, untouched, stats, stats_cols)
-        if v is not None:
-            return v
+    return _rewrite_files(
+        spark, table_dir, (col, lo, hi), lambda c: c.where(keep_pred), stats_cols
+    )
 
 
 def update_where(
@@ -641,23 +658,14 @@ def update_where(
     -> SQL expression) applied ONLY to matching rows — non-matching rows
     in a candidate file are rewritten verbatim, untouched files carry over
     by reference. Same O(matching files) write-amplification bound and
-    history semantics as ``delete_where``; together with it and the
-    upsert-MERGE composition this completes the DML trio on the manifest
-    protocol.  SQL UPDATE NULL semantics hold for free here: ``F.when``
-    only fires on a TRUE match, so NULL-``col`` rows rewrite verbatim.  An
-    update whose range overlaps no files is a no-op returning the current
-    version (ADVICE r5 #3)."""
-    vs = versions(table_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed versions in {table_dir}")
+    history semantics as ``delete_where``.  SQL UPDATE NULL semantics hold
+    for free here: ``F.when`` only fires on a TRUE match, so NULL-``col``
+    rows rewrite verbatim.  An update whose range overlaps no files is a
+    no-op returning the current version (ADVICE r5 #3)."""
     match = F.col(col).between(F.lit(lo), F.lit(hi))
-    while True:
-        n = versions(table_dir)[-1] + 1
-        candidates, untouched = pruned_files(table_dir, n - 1, col, lo, hi)
-        if not candidates:  # nothing overlaps: no-op, not an error
-            return n - 1
-        cand = spark.read.parquet(*candidates)
-        updated = cand.select(
+
+    def update(cand: DataFrame) -> DataFrame:
+        return cand.select(
             *[
                 F.when(match, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
                 if c in set_exprs
@@ -665,11 +673,8 @@ def update_where(
                 for c in cand.columns
             ]
         )
-        prev_stats = _manifest(table_dir, n - 1).get("stats", {})
-        stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        v = _commit_rewrite(updated, table_dir, n, untouched, stats, stats_cols)
-        if v is not None:
-            return v
+
+    return _rewrite_files(spark, table_dir, (col, lo, hi), update, stats_cols)
 
 
 def optimize_table(
@@ -688,104 +693,83 @@ def optimize_table(
     stay sane. History is preserved (the fragmented version remains
     time-travelable until vacuum). At 100 TB this runs per partition/
     bucket of the table, never globally — the registry query's whole-table
-    form is the fixture-scale demonstration.
+    form is the fixture-scale demonstration.  A commit race re-compacts
+    the WINNER's snapshot (ADVICE r5 #2); a version with no files is left
+    as it is."""
 
-    The snapshot is (re-)read INSIDE the publish-retry loop: after a
-    CommitConflict the loser must compact the WINNER's snapshot, not its
-    own stale read — re-publishing a stale compaction would silently
-    discard the concurrent writer's committed rows, the exact lost-update
-    the put-if-absent protocol exists to prevent (ADVICE r5 #2)."""
-    while True:
-        n = versions(table_dir)[-1] + 1
-        df = read_version(spark, table_dir, version=n - 1)
+    def compact(df: DataFrame) -> DataFrame:
         if order_by:
-            df = df.repartitionByRange(
+            return df.repartitionByRange(
                 target_files, *[F.col(c) for c in order_by]
             )
-        else:
-            df = df.repartition(target_files)
-        v = _commit_rewrite(df, table_dir, n, [], {}, stats_cols)
-        if v is not None:
-            return v
+        return df.repartition(target_files)
+
+    return _rewrite_files(spark, table_dir, None, compact, stats_cols)
 
 
 def merge_into(
     spark: SparkSession,
     table_dir: str,
     source: DataFrame,
-    key: str,
+    keys: list[str],
     delete_col: str | None = None,
     stats_cols: tuple[str, ...] = (),
 ) -> int:
     """MERGE INTO by copy-on-write — the fourth verb of the lakehouse DML
     quartet (append / DELETE / UPDATE / MERGE), Delta's
     ``whenMatchedUpdateAll / whenMatchedDelete / whenNotMatchedInsertAll``
-    on the manifest protocol. This is the versioned-table generalization
-    of the reference's keep-latest upsert (reference load.py:94-119
-    staging+ON CONFLICT; ``sinks/upsert.py: parquet_upsert`` is the flat
-    analog) — same matched-row-replacement semantics, plus tombstones,
-    inserts, history, and stats-bounded write amplification:
+    on the manifest protocol, and the versioned form of the reference's
+    keyed upsert (reference load.py:94-119).  The rows are
+    ``sinks/upsert.py: keyed_merge``, the core ``parquet_upsert`` uses:
 
-    - target rows whose ``key`` matches a source row are REPLACED by the
-      source row (upsert), or DELETED when the source row's ``delete_col``
-      is true (CDC tombstone);
+    - target rows whose ``keys`` match a source row null-safely are
+      REPLACED by the source row (upsert), or DELETED when the source row's
+      ``delete_col`` is true (CDC tombstone);
     - source rows matching no target row are INSERTED (tombstones for
       absent keys are ignored, like Delta's unmatched whenMatchedDelete).
 
     ``source`` must be key-unique (dedup keep-last upstream — Delta raises
     on multiple matches too; enforced here with a cheap count check) and
-    share the target schema (minus ``delete_col``).
+    share the target schema (minus ``delete_col``).  An empty source is a
+    no-op returning the current version.
 
-    Scale shape: one aggregate computes the source's [min, max] key range;
-    manifest stats then bound the rewrite to the files whose key range can
-    overlap it — a trickle of late rows against a 100 TB key-ordered table
-    rewrites O(touched files), never O(table). The rewrite itself is one
-    left-anti join (drop matched target rows) plus a union of the source's
-    non-tombstone rows; untouched files carry over by reference. The
-    snapshot and candidate split are re-derived INSIDE the publish-retry
-    loop, so losing a commit race re-merges against the winner's snapshot
-    (same lost-update rule as optimize_table).
+    Scale shape: one aggregate counts the source's rows and computes the
+    [min, max] of its FIRST key; manifest stats then bound the rewrite to the files whose
+    range of that key can overlap it, so a trickle of late rows against a
+    100 TB key-ordered table rewrites O(touched files), never O(table).
+    Stats cannot show where NULL keys are, so a source with a NULL first
+    key makes every file a candidate.  Untouched files carry over by
+    reference; a commit race re-merges against the winner's snapshot.
     """
-    vs = versions(table_dir)
-    if not vs:
+    from ..sinks.upsert import keyed_merge
+
+    if not versions(table_dir):
         raise FileNotFoundError(f"no committed versions in {table_dir}")
-    # Pin the source ONCE before any of its three consumers (dup check, key
+    # Pin the source ONCE before any of its consumers (dup check, key
     # bounds, anti-join/union per publish attempt): a non-deterministic or
     # mutable-input source re-evaluated per consumer could pass the
     # uniqueness check yet merge different rows, silently breaking the
     # key-unique contract — and each commit-conflict retry would recompute
     # the full source lineage (r6 ADVICE).
     source = source.localCheckpoint(eager=True)
-    dup = source.groupBy(key).count().where(F.col("count") > 1).limit(1)
+    k = keys[0]
+    b = source.agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col(k).isNull()).alias("nulls"),
+        F.min(k).alias("lo"),
+        F.max(k).alias("hi"),
+    ).collect()[0]
+    if not b["rows"]:
+        return versions(table_dir)[-1]
+    dup = source.groupBy(*keys).count().where(F.col("count") > 1).limit(1)
     if dup.count():
         raise ValueError("merge source must be key-unique; dedup upstream")
-    bounds = source.agg(
-        F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).collect()[0]
-    if bounds["lo"] is None:  # empty source: no-op
-        return versions(table_dir)[-1]
-    upserts = (
-        source.where(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
-        if delete_col is not None
-        else source
+    prune = None if b["nulls"] else (k, b["lo"], b["hi"])
+    return _rewrite_files(
+        spark,
+        table_dir,
+        prune,
+        lambda cand: keyed_merge(cand, source, keys, delete_col),
+        stats_cols,
+        inserts=True,
     )
-    keys = source.select(key)
-    while True:
-        n = versions(table_dir)[-1] + 1
-        candidates, untouched = pruned_files(
-            table_dir, n - 1, key, bounds["lo"], bounds["hi"]
-        )
-        if candidates:
-            target = spark.read.parquet(*candidates)
-            rewritten = target.join(keys, on=key, how="left_anti").unionByName(
-                upserts
-            )
-        else:
-            rewritten = upserts
-        prev_stats = _manifest(table_dir, n - 1).get("stats", {})
-        stats = {f: prev_stats[f] for f in untouched if f in prev_stats}
-        v = _commit_rewrite(rewritten, table_dir, n, untouched, stats, stats_cols)
-        if v is not None:
-            return v

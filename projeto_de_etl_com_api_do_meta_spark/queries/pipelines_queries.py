@@ -25,7 +25,7 @@ from ..plans.pipelines import (
     run_dimension,
     run_lead_insights,
 )
-from ..session import pin_query_session_conf, scoped_conf
+from ..session import pin_query_session_conf, stream_state_width
 from ..sources.meta_rest import MetaRestSource
 from ..streaming.windows import (
     dedup_within_watermark,
@@ -352,7 +352,7 @@ GROUP BY 1, 2
 )
 def stream_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = tumbling_daily(read_events_stream(spark, sf_dir))
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             return run_available_now(stream, ckpt)
@@ -386,7 +386,7 @@ GROUP BY 1, 2, 3
 )
 def stream_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = sliding_hourly(read_events_stream(spark, sf_dir))
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             return run_available_now(stream, ckpt)
@@ -431,7 +431,7 @@ GROUP BY user_id, sid
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = session_windows(read_events_stream(spark, sf_dir))
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             return run_available_now(stream, ckpt)
@@ -448,7 +448,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = dedup_within_watermark(read_events_stream(spark, sf_dir)).select(
             "event_id"
         )
@@ -1121,7 +1121,7 @@ def stream_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import stateful_user_counters
 
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = stateful_user_counters(read_events_stream(spark, sf_dir))
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             out = run_available_now(stream, ckpt, output_mode="update")
@@ -1169,7 +1169,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"))
     )
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = enrich_with_static_dim(read_events_stream(spark, sf_dir), user_dim)
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             out = run_available_now(stream, ckpt)
@@ -1268,7 +1268,7 @@ def meta_stream_insights_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_meta_stream_source(spark)
     tmp = tempfile.mkdtemp(prefix="meta_stream_")
     out = f"{tmp}/ingested"
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         q = (
             spark.readStream.format("meta_insights_stream")
             .load()
@@ -1322,7 +1322,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import chained_hourly_to_daily
 
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         stream = chained_hourly_to_daily(
             read_events_stream(spark, sf_dir, sentinel=True)
         )
@@ -1403,7 +1403,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin_query_session_conf(spark)
     stream_dir = chunked_docs_stream_dir(spark, sf_dir, n_chunks=5)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         # Stable per-(sf_dir) run dir, wiped at the START of each call so the
         # returned DataFrame stays parquet-backed (no driver collect round-
         # trip) — the store outlives this function; the next call cleans it.
@@ -1482,7 +1482,7 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin_query_session_conf(spark)
     stream_dir = chunked_docs_stream_dir(spark, sf_dir, n_chunks=5)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         run = _fresh_run_dir("incr_neardup", sf_dir)
         q = incremental_neardup_suppress(
             spark,
@@ -1724,10 +1724,10 @@ def stream_cdc_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rn") == 1)
             .select("user_id", "cents", "is_del")
         )
-        merge_into(spark, table, last, key="user_id", delete_col="is_del",
+        merge_into(spark, table, last, keys=["user_id"], delete_col="is_del",
                    stats_cols=("user_id",))
         # replayed micro-batch: content-idempotent by MERGE semantics
-        merge_into(spark, table, last, key="user_id", delete_col="is_del",
+        merge_into(spark, table, last, keys=["user_id"], delete_col="is_del",
                    stats_cols=("user_id",))
 
     q = (
@@ -1889,7 +1889,7 @@ def stream_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import hll_rank_cols
 
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         ev = read_events_stream(spark, sf_dir).where(
             F.col("user_id").isNotNull()
         )

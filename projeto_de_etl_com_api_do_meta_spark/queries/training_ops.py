@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..session import pin_query_session_conf, scoped_conf
+from ..session import pin_query_session_conf, stream_state_width
 from ..streaming.windows import (
     clicks_purchases_join,
     read_events_stream,
@@ -355,21 +355,16 @@ WHERE c.event_type = 'click'
 )
 def stream_stream_join_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    # State partitions = shuffle.partitions at stream start; fixture-scale
-    # state fits a handful of stores (production would size this to state
-    # volume — see session.scoped_conf).  noDataMicroBatches off (r12):
+    # State partitions: see session.stream_state_width.  noDataMicroBatches
+    # off (r12):
     # an INNER stream-stream join emits every match in the batch that
     # finds it, so the trailing zero-row watermark batch — measured at a
     # third of the query's wall time (state-store open/commit × partitions
     # × 4 join stores on 0 rows) — only evicts state the terminating
     # AvailableNow run never reuses.  Output is identical; outer-join
     # streams (which DO emit on watermark advance) keep the default.
-    with scoped_conf(
-        spark,
-        **{
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-        },
+    with stream_state_width(
+        spark, **{"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
     ):
         events = read_events_stream(spark, sf_dir)
         joined = clicks_purchases_join(events)
@@ -1702,7 +1697,7 @@ WHERE c.event_type = 'click'
 )
 def stream_stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         events = read_events_stream(spark, sf_dir, sentinel=True)
         joined = clicks_purchases_join(events, how="left_outer")
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
@@ -1745,7 +1740,7 @@ FULL OUTER JOIN purchases p
 )
 def stream_stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}):
+    with stream_state_width(spark):
         events = read_events_stream(spark, sf_dir, sentinel=True)
         joined = clicks_purchases_join(events, how="full_outer")
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:

@@ -1363,7 +1363,7 @@ def lakehouse_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_del", F.lit(False)
     )
     src = updates.unionByName(deletes).unionByName(inserts)
-    merge_into(spark, table, src, key="k", delete_col="is_del",
+    merge_into(spark, table, src, keys=["k"], delete_col="is_del",
                stats_cols=("k",))
     return (
         read_version(spark, table)

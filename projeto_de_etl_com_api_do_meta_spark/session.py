@@ -97,13 +97,8 @@ from contextlib import contextmanager
 @contextmanager
 def scoped_conf(spark: SparkSession, **confs: str):
     """Temporarily set runtime-mutable session confs, restoring on exit.
-
-    Used by streaming registry queries to right-size the number of state
-    store partitions (= ``spark.sql.shuffle.partitions`` at query start) for
-    the expected state volume: a state store instance per partition has
-    fixed setup cost, so tiny-state demos pin it low while large-state
-    production jobs would pin it high. Results are unaffected.
-    """
+    Results are unaffected; ``stream_state_width`` is the streaming
+    queries' use of it."""
     keys = {k.replace("__", "."): v for k, v in confs.items()}
     old: dict[str, str | None] = {}
     for k, v in keys.items():
@@ -120,6 +115,20 @@ def scoped_conf(spark: SparkSession, **confs: str):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def stream_state_width(spark: SparkSession, **confs: str):
+    """``scoped_conf`` for a registry streaming query: 8 shuffle partitions,
+    plus any other ``confs``.
+
+    A stateful stream's state-store partition count is
+    ``spark.sql.shuffle.partitions`` at its FIRST start, and it is fixed in
+    the checkpoint from then on: a restarted query keeps it whatever the
+    session says.  So this is a once-per-checkpoint choice.  8 suits the
+    registry's fixture-size streams (each partition's state store has a
+    fixed setup cost); a production stream would size it from its volume.
+    """
+    return scoped_conf(spark, **{"spark.sql.shuffle.partitions": "8"}, **confs)
 
 
 def pin_query_session_conf(spark: SparkSession) -> None:

@@ -9,15 +9,15 @@ The reference loads via staging-table + one set-based
   connection, drop staging in a finally-block.  SQL generation is pure and
   unit-tested; execution requires a live database (none in this
   environment), so ``write`` is import/connection-gated.
-- ``parquet_upsert`` — lakehouse variant: key-based merge into a parquet
-  target.  The batch is deduplicated per key and, when a target exists,
-  materialized once (``localCheckpoint``); then target ∖ batch keys
-  (null-safe anti-join) ∪ batch is written and swapped in atomically.  The
-  batch plan — and the API fetch behind it — runs once per upsert, as
-  Delta's MERGE materializes its source.  Idempotent: re-running the same
-  batch is a no-op, and an empty batch does not rewrite the target; used
-  by the streaming foreachBatch sink.  At scale the same call-shape maps
-  onto Delta ``MERGE INTO``.
+- ``parquet_upsert`` — key-based merge into a flat parquet directory,
+  swapped in atomically.  Idempotent: re-running the same batch is a
+  no-op, and an empty batch does not rewrite the target; used by the
+  streaming foreachBatch sink.
+
+The row-level merge of ``parquet_upsert`` is ``keyed_merge``, which
+``operators/lakehouse.py: merge_into`` (the versioned, O(touched files)
+MERGE with tombstones and time travel) shares, so both sinks match
+composite keys null-safely.
 
 Conflict keys per table follow load.py:49-63 (schemas.UPSERT_KEYS); JSONB
 casts follow load.py:77-91.
@@ -140,6 +140,72 @@ def _dedup_batch(
     return batch.dropDuplicates(keys)
 
 
+
+
+def keyed_merge(
+    target: DataFrame | None,
+    batch: DataFrame,
+    keys: list[str],
+    delete_col: str | None = None,
+) -> DataFrame:
+    """The keyed MERGE both sinks share: ``target ∖ batch keys ∪ live batch
+    rows``, in the target's column order.
+
+    ``batch`` must be key-unique.  Keys may be composite and match
+    null-safely (``<=>``), so a batch row with a NULL key component replaces
+    the target row with the same key instead of adding a second one.  A
+    batch row whose ``delete_col`` is true is a tombstone: it removes the
+    matching target row and is not inserted.  With no ``target`` the result
+    is the live batch rows."""
+    live = (
+        batch.where(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
+        if delete_col is not None
+        else batch
+    )
+    if target is None:
+        return live
+    batch_keys = batch.select(*keys)
+    kept = target.join(
+        batch_keys,
+        on=[target[k].eqNullSafe(batch_keys[k]) for k in keys],
+        how="left_anti",
+    )
+    return kept.select(*target.columns).unionByName(live.select(*target.columns))
+
+
+def swap_dir(spark: SparkSession, target_path: str, rewrite) -> None:
+    """Replace the parquet directory ``target_path`` with
+    ``rewrite(current)``, where ``current`` reads the directory (``None``
+    when there is none).  A ``rewrite`` that returns ``None`` leaves the
+    directory as it is.
+
+    The new rows are written to a temporary directory beside the target,
+    which is removed whatever happens.  Then two renames swap it in: the
+    target moves to ``<target>.old`` and the new directory takes its name.
+    A crash between the two renames leaves only ``.old``; the next call
+    renames it back before reading, so the table is never lost.  A leftover
+    ``.old`` next to a live target is from a crash after the swap and is
+    deleted."""
+    old = target_path + ".old"
+    if not os.path.exists(target_path) and os.path.exists(old):
+        os.rename(old, target_path)
+    current = spark.read.parquet(target_path) if os.path.exists(target_path) else None
+    df = rewrite(current)
+    if df is None:
+        return
+    tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(target_path) or ".")
+    try:
+        out = os.path.join(tmp, "data")
+        df.write.mode("overwrite").parquet(out)
+        shutil.rmtree(old, ignore_errors=True)
+        if current is not None:
+            os.rename(target_path, old)
+        os.rename(out, target_path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def parquet_upsert(
     spark: SparkSession,
     batch: DataFrame,
@@ -147,12 +213,12 @@ def parquet_upsert(
     keys: list[str],
     order_col: str | None = None,
 ) -> None:
-    """Key-based MERGE into a parquet table with an atomic directory swap.
+    """Key-based MERGE into a flat parquet directory (``keyed_merge``,
+    swapped in by ``swap_dir``).
 
     Batch is deduplicated per key first (Delta MERGE's multi-match rule;
     keep-last by ``order_col`` when given, matching the reference's
-    last-write-wins upsert).  Keys match null-safely (``<=>``): a batch row
-    whose key has a NULL replaces the target row with the same key.
+    last-write-wins upsert).  Keys match null-safely (``<=>``).
 
     Against an existing target the deduplicated batch is read once: it is
     materialized with ``localCheckpoint`` and both the anti-join's key side
@@ -168,97 +234,15 @@ def parquet_upsert(
     idempotent) converges."""
     batch = _dedup_batch(batch, keys, order_col)
 
-    if os.path.exists(target_path):
-        target = spark.read.parquet(target_path)
+    def merge(target: DataFrame | None) -> DataFrame | None:
+        if target is None:
+            return batch
         missing = [c for c in target.columns if c not in batch.columns]
         if missing:
             raise ValueError(f"batch missing target columns: {missing}")
-        batch = batch.localCheckpoint(eager=True)
-        if batch.isEmpty():
-            return
-        # the deduplicated batch has one row per key (NULLs equal), so its
-        # key column set is already distinct
-        batch_keys = batch.select(*keys)
-        kept = target.join(
-            batch_keys,
-            on=[target[k].eqNullSafe(batch_keys[k]) for k in keys],
-            how="left_anti",
-        )
-        merged = kept.select(*target.columns).unionByName(
-            batch.select(*target.columns)
-        )
-    else:
-        merged = batch
+        pinned = batch.localCheckpoint(eager=True)
+        if pinned.isEmpty():
+            return None
+        return keyed_merge(target, pinned, keys)
 
-    tmp = tempfile.mkdtemp(prefix="upsert_", dir=os.path.dirname(target_path) or ".")
-    out = os.path.join(tmp, "data")
-    merged.write.mode("overwrite").parquet(out)
-    old = target_path + ".old"
-    if os.path.exists(target_path):
-        os.rename(target_path, old)
-    os.rename(out, target_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# Delta Lake MERGE variant (import-gated: delta-spark jars absent in this
-# container — COVERAGE.md gap #2). Mirrors sources/meta_sdk.py's SDK gate:
-# the interface and merge-building logic are pinned by tests now, and the
-# execution path lights up the moment the jars exist.
-# ---------------------------------------------------------------------------
-
-
-def delta_available() -> bool:
-    """True when the delta-spark Python bindings are importable."""
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def delta_merge_condition(keys: list[str]) -> str:
-    """The MERGE ON condition for a keyed upsert (pure; unit-tested
-    without jars). Null-safe equality (``<=>``) so NULL key components
-    match themselves — the same key match parquet_upsert's anti-join
-    uses."""
-    if not keys:
-        raise ValueError("delta upsert requires at least one key column")
-    return " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-
-
-def delta_upsert(
-    spark: SparkSession,
-    batch: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str | None = None,
-) -> None:
-    """Keyed MERGE INTO a Delta table — the scale path parquet_upsert's
-    directory swap approximates. Same call shape and batch-dedup rule, so
-    foreachBatch sinks swap implementations with one name change.
-
-    Unlike the swap (which rewrites the whole target), Delta MERGE
-    rewrites only the files containing matched keys and commits a
-    transaction-log entry — O(touched data) on a table of any size.
-    """
-    if not delta_available():
-        raise ImportError(
-            "delta-spark is not installed; use parquet_upsert (same "
-            "semantics via atomic directory swap) or add the delta jars"
-        )
-    from delta.tables import DeltaTable
-
-    batch = _dedup_batch(batch, keys, order_col)
-    if DeltaTable.isDeltaTable(spark, target_path):
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(batch.alias("s"), delta_merge_condition(keys))
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    else:
-        batch.write.format("delta").mode("errorifexists").save(target_path)
+    swap_dir(spark, target_path, merge)

@@ -566,34 +566,26 @@ def compact_store(
     spark, store_path: str, keep_predicate=None, target_files: int = 4
 ) -> None:
     """Rewrite a parquet state store in place: optional row filter (TTL),
-    coalesce to ``target_files`` files, atomic-ish directory swap.
+    coalesce to ``target_files`` files, directory swap.
 
     The per-batch ``mode("append")`` pattern the incremental operators use
     adds one file set per micro-batch, so after B batches every store probe
     reads B file footers — compaction resets that to ``target_files``.
     Runs driver-side between batches (foreachBatch is serialized per query),
     so no concurrent reader exists during the swap.  The swap is
-    rename-based (write tmp -> move old aside -> rename tmp -> drop old);
-    a crash in the middle can leave the store at ``<path>.old`` — a real
-    deployment gets this atomicity from a table format's transaction log
-    (Delta/Iceberg OPTIMIZE), which this container lacks (COVERAGE.md
-    gap #2); the shape is identical."""
-    import os
-    import shutil
+    ``sinks/upsert.py: swap_dir``, the one ``parquet_upsert`` uses: a crash
+    between its two renames leaves the store at ``<path>.old``, which the
+    next swap of the same path renames back."""
+    from ..sinks.upsert import swap_dir
 
-    if not os.path.exists(store_path):
-        return
-    df = spark.read.parquet(store_path)
-    if keep_predicate is not None:
-        df = df.where(keep_predicate)
-    tmp = store_path + ".compact_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    old = store_path + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_path, old)
-    os.rename(tmp, store_path)
-    shutil.rmtree(old, ignore_errors=True)
+    def compact(df):
+        if df is None:
+            return None
+        if keep_predicate is not None:
+            df = df.where(keep_predicate)
+        return df.coalesce(target_files)
+
+    swap_dir(spark, store_path, compact)
 
 
 def incremental_neardup_suppress(

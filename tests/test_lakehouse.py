@@ -491,7 +491,7 @@ def test_merge_into_upsert_delete_insert_with_file_sharing(spark, tmp_path):
         ],
         "k long, v string, is_del boolean",
     )
-    v = merge_into(spark, table, src, key="k", delete_col="is_del",
+    v = merge_into(spark, table, src, keys=["k"], delete_col="is_del",
                    stats_cols=("k",))
     after = set(manifest_files(table, v))
     # the [100..102] file is outside the source key range: shared by ref
@@ -519,7 +519,7 @@ def test_merge_into_rejects_duplicate_source_keys(spark, tmp_path):
     )
     src = spark.createDataFrame([(1, "x"), (1, "y")], "k long, v string")
     with pytest.raises(ValueError, match="key-unique"):
-        merge_into(spark, table, src, key="k")
+        merge_into(spark, table, src, keys=["k"])
 
 
 def test_merge_into_empty_source_is_noop(spark, tmp_path):
@@ -535,7 +535,7 @@ def test_merge_into_empty_source_is_noop(spark, tmp_path):
         stats_cols=("k",),
     )
     src = spark.createDataFrame([], "k long, v string")
-    assert merge_into(spark, table, src, key="k") == 1
+    assert merge_into(spark, table, src, keys=["k"]) == 1
     assert versions(table) == [1]
 
 
@@ -564,7 +564,7 @@ def test_merge_into_retry_merges_against_winners_snapshot(spark, tmp_path):
     lh._publish = racing_publish
     try:
         src = spark.createDataFrame([(1, "a2")], "k long, v string")
-        v = lh.merge_into(spark, table, src, key="k", stats_cols=("k",))
+        v = lh.merge_into(spark, table, src, keys=["k"], stats_cols=("k",))
     finally:
         lh._publish = real_publish
     got = {(r.k, r.v) for r in lh.read_version(spark, table, v).collect()}
@@ -681,3 +681,85 @@ def test_nan_and_infinite_bounds_keep_the_manifest_strict_json(spark, tmp_path):
     spark.createDataFrame(special, schema).coalesce(1).write.parquet(out)
     (path,) = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")]
     assert "x" not in _column_stats(spark, [path], ("x", "d"))[path]
+
+
+def test_all_null_stats_chunk_needs_no_fallback_scan(spark, tmp_path, caplog):
+    """A file whose stats column is entirely NULL has no min/max in its
+    footer.  That is not an unusable footer: no warning, no exact-scan job,
+    and the file is always kept by pruning."""
+    import logging
+
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import (
+        read_version_pruned,
+    )
+
+    nulls = _df(spark, [(None, "n1"), (None, "n2")]).coalesce(1)
+    sc = spark.sparkContext
+
+    def jobs(label, table, **kw):
+        sc.setJobGroup(label, label)
+        try:
+            commit_append(nulls, table, **kw)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(label))
+
+    table = str(tmp_path / "t")
+    plain = jobs("commit-plain", str(tmp_path / "plain"))
+    with caplog.at_level(logging.WARNING):
+        with_stats = jobs("commit-stats", table, stats_cols=("k",))
+    assert "footer stats unusable" not in caplog.text
+    assert with_stats == plain
+    commit_append(_df(spark, [(5, "a"), (7, "b")]).coalesce(1), table, stats_cols=("k",))
+    for lo, hi in ((5, 5), (6, 9), (100, 200)):
+        got = sorted(
+            (r.k, r.v) for r in read_version_pruned(spark, table, "k", lo, hi).collect()
+        )
+        exact = sorted(
+            (r.k, r.v)
+            for r in read_version(spark, table).where(F.col("k").between(lo, hi)).collect()
+        )
+        assert got == exact
+
+
+def _merge_table(spark, tmp_path, rows):
+    table = str(tmp_path / "t")
+    commit_version(
+        spark.createDataFrame(rows, "k long, v string").repartitionByRange(2, "k"),
+        table,
+        stats_cols=("k",),
+    )
+    return table
+
+
+def test_merge_into_null_key_rerun_keeps_one_row(spark, tmp_path):
+    """A batch mixing a NULL and a non-NULL key, merged twice: the NULL key
+    matches itself, so the table keeps one row per key."""
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import merge_into
+
+    table = _merge_table(spark, tmp_path, [(1, "a"), (None, "n"), (50, "z")])
+    src = spark.createDataFrame([(1, "a2"), (None, "n2")], "k long, v string")
+    for _ in range(2):
+        v = merge_into(spark, table, src, keys=["k"], stats_cols=("k",))
+    got = sorted(
+        ((r.k, r.v) for r in read_version(spark, table, v).collect()),
+        key=lambda t: (t[0] is not None, t),
+    )
+    assert got == [(None, "n2"), (1, "a2"), (50, "z")]
+
+
+def test_merge_into_all_null_key_batch_is_not_a_noop(spark, tmp_path):
+    """A batch whose only key is NULL replaces the NULL-key row (and its
+    tombstone deletes it); it is not read as an empty batch."""
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import merge_into
+
+    table = _merge_table(spark, tmp_path, [(1, "a"), (None, "n")])
+    up = spark.createDataFrame([(None, "n2", False)], "k long, v string, d boolean")
+    v = merge_into(spark, table, up, keys=["k"], delete_col="d")
+    assert v == 2
+    got = {(r.k, r.v) for r in read_version(spark, table, v).collect()}
+    assert got == {(1, "a"), (None, "n2")}
+    gone = spark.createDataFrame([(None, None, True)], "k long, v string, d boolean")
+    v = merge_into(spark, table, gone, keys=["k"], delete_col="d")
+    assert {(r.k, r.v) for r in read_version(spark, table, v).collect()} == {(1, "a")}
+

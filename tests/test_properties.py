@@ -67,6 +67,54 @@ def test_parquet_upsert_idempotent_and_last_write_wins(spark, tmp_path_factory, 
     assert once == {**base, **delta}  # delta overwrites, base survives
 
 
+_KEY = st.tuples(st.sampled_from([None, 0, 1, 2]), st.sampled_from([None, "a", "b"]))
+
+
+@given(
+    target=st.dictionaries(_KEY, st.integers(-9, 9), min_size=1, max_size=8),
+    batch=st.dictionaries(_KEY, st.integers(-9, 9), max_size=6),
+)
+@example(
+    target={(None, None): 1, (0, "a"): 2, (None, "b"): 3, (2, None): 4},
+    batch={(None, None): 5, (0, "a"): 6, (1, None): 7},
+)
+@example(target={(1, "a"): 1, (None, "a"): 2}, batch={(None, "a"): 3})
+@_SLOW
+def test_flat_and_manifest_sinks_merge_alike(spark, tmp_path_factory, target, batch):
+    """``parquet_upsert`` into a flat directory and ``merge_into`` into a
+    versioned table apply one keyed MERGE: composite keys, NULL key
+    components matching themselves, and a re-run that changes nothing."""
+    from collections import Counter
+
+    from projeto_de_etl_com_api_do_meta_spark.operators.lakehouse import (
+        commit_version,
+        merge_into,
+        read_version,
+    )
+
+    schema = "k1 long, k2 string, v long"
+    keys = ["k1", "k2"]
+    root = tmp_path_factory.mktemp("merge")
+    flat, table = str(root / "flat"), str(root / "table")
+
+    def frame(d):
+        return spark.createDataFrame([(*k, v) for k, v in d.items()], schema)
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    parquet_upsert(spark, frame(target), flat, keys)
+    commit_version(
+        frame(target).repartitionByRange(2, "k1"), table, stats_cols=("k1",)
+    )
+    want = Counter((*k, v) for k, v in {**target, **batch}.items())
+    for _ in range(2):
+        parquet_upsert(spark, frame(batch), flat, keys)
+        merge_into(spark, table, frame(batch), keys, stats_cols=("k1",))
+        assert rows(spark.read.parquet(flat)) == want
+        assert rows(read_version(spark, table)) == want
+
+
 @given(rows=st.lists(st.tuples(st.integers(0, 5), st.text(max_size=3)), max_size=10))
 @_SLOW
 def test_union_by_name_column_order_invariance(spark, rows):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from projeto_de_etl_com_api_do_meta_spark.sinks.upsert import (
     merge_sql,
     parquet_upsert,
@@ -120,56 +122,42 @@ def test_parquet_upsert_batch_dedup_keep_last(spark, tmp_path):
     assert _read(spark, target) == {(1,): ("new", 2)}
 
 
-def test_delta_merge_condition_null_safe_and_guarded():
-    """Pure merge-condition builder (no jars needed): null-safe equality
-    per key, non-empty key list enforced."""
-    import pytest as _pytest
+def test_crash_between_swap_renames_keeps_the_table(spark, tmp_path, monkeypatch):
+    """A crash after the target moved to ``.old`` but before the new data
+    took its name: the next upsert restores ``.old`` and merges into it."""
+    target = os.path.join(str(tmp_path), "t")
+    schema = "k int, v string, ts int"
+    parquet_upsert(spark, spark.createDataFrame([(1, "a", 1), (2, "b", 1)], schema), target, ["k"])
 
-    from projeto_de_etl_com_api_do_meta_spark.sinks.upsert import (
-        delta_merge_condition,
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise RuntimeError("crash between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with pytest.raises(RuntimeError, match="between the renames"):
+        parquet_upsert(spark, spark.createDataFrame([(2, "B", 2)], schema), target, ["k"])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(target) and os.path.exists(target + ".old")
+
+    parquet_upsert(spark, spark.createDataFrame([(3, "c", 3)], schema), target, ["k"])
+    assert _read(spark, target) == {(1,): ("a", 1), (2,): ("b", 1), (3,): ("c", 3)}
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_failed_upsert_write_leaves_no_temp_dir(spark, tmp_path):
+    """A batch that fails while it is written leaves no table and no temp
+    dir behind."""
+    bad = spark.range(3).selectExpr(
+        "CAST(IF(id = 2, raise_error('boom'), id) AS INT) AS k", "'x' AS v", "0 AS ts"
     )
-
-    assert delta_merge_condition(["a"]) == "t.`a` <=> s.`a`"
-    assert (
-        delta_merge_condition(["a", "b"])
-        == "t.`a` <=> s.`a` AND t.`b` <=> s.`b`"
-    )
-    with _pytest.raises(ValueError):
-        delta_merge_condition([])
-
-
-def test_delta_upsert_gate_without_jars(spark, tmp_path):
-    """Without delta-spark the gated sink must fail loudly with the
-    parquet_upsert pointer, never half-write."""
-    import pytest as _pytest
-
-    from projeto_de_etl_com_api_do_meta_spark.sinks.upsert import (
-        delta_available,
-        delta_upsert,
-    )
-
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    if delta_available():
-        _pytest.skip("delta-spark present; gate test is for its absence")
-    with _pytest.raises(ImportError, match="parquet_upsert"):
-        delta_upsert(spark, df, str(tmp_path / "t"), ["k"])
-
-
-def test_delta_upsert_roundtrip_when_available(spark, tmp_path):
-    """Environment-gated end-to-end MERGE (runs wherever the jars exist:
-    insert, update-by-key, idempotent retry)."""
-    import pytest as _pytest
-
-    _pytest.importorskip("delta")
-    from projeto_de_etl_com_api_do_meta_spark.sinks.upsert import delta_upsert
-
-    t = str(tmp_path / "t")
-    delta_upsert(spark, spark.createDataFrame([(1, "a")], "k long, v string"), t, ["k"])
-    batch = spark.createDataFrame([(1, "a2"), (2, "b")], "k long, v string")
-    delta_upsert(spark, batch, t, ["k"])
-    delta_upsert(spark, batch, t, ["k"])  # retry is a no-op
-    rows = {(r.k, r.v) for r in spark.read.format("delta").load(t).collect()}
-    assert rows == {(1, "a2"), (2, "b")}
+    with pytest.raises(Exception, match="boom"):
+        parquet_upsert(spark, bad, os.path.join(str(tmp_path), "t"), ["k"])
+    assert os.listdir(tmp_path) == []
 
 
 def test_postgres_on_conflict_roundtrip_when_available():
