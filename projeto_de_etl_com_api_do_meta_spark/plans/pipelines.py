@@ -183,7 +183,7 @@ def run_lead_insights(source: MetaRestSource) -> DataFrame:
 def run_raw_leads(source: MetaRestSource) -> DataFrame:
     """ads_raw_leads — the reference's latent 4th path (extract.py:60-100 ->
     load.py:58-100, wired but never called from main.py:17-31): correlated
-    per-form lead fetch (S3, executor-parallel mapInPandas), id rename,
+    per-form lead fetch (S3, executor-parallel mapInArrow), id rename,
     created_time day coercion (load.py:37-40), JSON field_data carried as a
     string for the sink's ::JSONB cast (S7), keep-first dedup per lead_id."""
     raw = source.read_leads()

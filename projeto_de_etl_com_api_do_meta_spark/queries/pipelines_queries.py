@@ -1053,7 +1053,7 @@ WHERE rn = 1
     doc=(
         "Latent ads_raw_leads path (reference extract.py:60-100, never wired "
         "into main.py): per-form correlated lead fetch via executor-parallel "
-        "mapInPandas, day-coerced created_time, JSONB-ready field_data, "
+        "mapInArrow, day-coerced created_time, JSONB-ready field_data, "
         "keep-first dedup per lead_id."
     ),
 )
@@ -1182,9 +1182,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "dsv2"),
     doc=(
         "Ads dimension built over the Python DataSource V2 reader "
-        "(sources/meta_dsv2.py): partition-per-page parallel scan with the "
-        "status IN-list accepted by pushFilters and executed by the "
-        "(fake) endpoint, nested adset/campaign structs flattened, "
+        "(sources/meta_dsv2.py): the pages fetched once at planning, one "
+        "partition per page, with the status IN-list accepted by "
+        "pushFilters and executed by the (fake) endpoint, nested adset/campaign structs flattened, "
         "keep-last dedup to the ad grain. Differential oracle: the raw "
         "fixture rows inlined as VALUES, transform re-implemented in SQL."
     ),

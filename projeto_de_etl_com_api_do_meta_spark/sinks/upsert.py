@@ -173,6 +173,17 @@ def keyed_merge(
     return kept.select(*target.columns).unionByName(live.select(*target.columns))
 
 
+def recover_dir(path: str) -> bool:
+    """Whether the parquet directory ``path`` exists, after renaming back
+    ``<path>.old`` when a crash between ``swap_dir``'s two renames left only
+    that.  Every reader of a directory that ``swap_dir`` rewrites checks
+    through here, so no reader mistakes an interrupted swap for no table."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+    return os.path.exists(path)
+
+
 def swap_dir(spark: SparkSession, target_path: str, rewrite) -> None:
     """Replace the parquet directory ``target_path`` with
     ``rewrite(current)``, where ``current`` reads the directory (``None``
@@ -183,13 +194,11 @@ def swap_dir(spark: SparkSession, target_path: str, rewrite) -> None:
     which is removed whatever happens.  Then two renames swap it in: the
     target moves to ``<target>.old`` and the new directory takes its name.
     A crash between the two renames leaves only ``.old``; the next call
-    renames it back before reading, so the table is never lost.  A leftover
-    ``.old`` next to a live target is from a crash after the swap and is
-    deleted."""
+    renames it back before reading (``recover_dir``), so the table is never
+    lost.  A leftover ``.old`` next to a live target is from a crash after
+    the swap and is deleted."""
     old = target_path + ".old"
-    if not os.path.exists(target_path) and os.path.exists(old):
-        os.rename(old, target_path)
-    current = spark.read.parquet(target_path) if os.path.exists(target_path) else None
+    current = spark.read.parquet(target_path) if recover_dir(target_path) else None
     df = rewrite(current)
     if df is None:
         return

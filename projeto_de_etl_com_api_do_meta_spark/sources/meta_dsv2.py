@@ -1,70 +1,72 @@
 """Meta-shaped DataSource V2 (Python data source API) — SURVEY §7 M5 phase 2.
 
-Upgrades the phase-1 driver-side fetch (`meta_rest.MetaRestSource`) to a real
-``spark.read.format(...)`` source:
+Thin Spark adapters over ``meta_rest``'s one read path (``edge_params`` ->
+``fetch_pages`` -> the schema contract's Arrow encoding), exposing the
+edges as ``spark.read.format(...)`` / ``spark.readStream.format(...)``:
 
-- **Partitioned scan**: each API *page* is an ``InputPartition``, so pages
-  are fetched executor-parallel instead of serially on the driver (the
-  reference pages serially in-process, extract.py:209-215). With a real
-  cursor API the page count comes from the paging metadata; the fake
-  transport derives it from the fixture row count at plan time.
+- **Partitioned scan**: each API *page* is an ``InputPartition``.  The pages
+  are fetched once, at planning (``partitions()``), and each partition
+  carries its page's rows; executors only encode them as Arrow record
+  batches (the reference pages serially in-process, extract.py:209-215).
 - **Filter pushdown** (``pushFilters``): IN/= on ``effective_status`` maps
   to the endpoint's ``filtering`` param (reference extract.py:125-128);
-  >=/<= on ``date_start`` maps to ``time_range`` (extract.py:199-205).
-  Accepted filters are executed by the (fake) server; everything else is
-  returned to Spark to evaluate — so a partially-pushable predicate stays
-  correct.
+  >=/<= on ``date_start`` map to the inclusive ``time_range``
+  (extract.py:199-205).  Repeated predicates intersect: the status sets,
+  the max of the lower and the min of the upper date bounds.  Accepted
+  filters are executed by the (fake) server; everything else — strict
+  ``>``/``<`` bounds included — is returned to Spark to evaluate, so a
+  partially-pushable predicate stays correct.
 - **Column pruning**: the engine's fixed schema contracts are the
   ``fields`` projection; Spark's required-schema pruning composes on top.
 
 Registered under the short name ``meta_ads``; ``edge`` option selects
 ``ads`` (default) or ``insights`` (+ optional ``breakdowns=age,gender`` /
-``region``).  Transport is the deterministic in-memory fake — a
-facebook_business-backed transport would plug in behind the same two
-methods (import-gated, the SDK is absent here).
+``region``); ``pagesize`` is the page (= partition) size.  Transport is the
+deterministic in-memory fake.
 
-The module also provides the other two legs of the DSv2 surface:
-``meta_insights_stream`` (``SimpleDataSourceStreamReader`` with day-indexed
-offsets — the reference's daily cron re-scan as a checkpointed streaming
-source) and ``meta_load`` (``DataSourceWriter`` implementing the
-reference's staged-chunk load + single atomic commit, load.py:42-46,94-119).
+``meta_insights_stream`` is the streaming leg:
+a ``SimpleDataSourceStreamReader`` with day-indexed offsets — the
+reference's daily cron re-scan as a checkpointed streaming source.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterable, Iterator, Sequence
-from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     EqualTo,
     Filter,
-    GreaterThan,
     GreaterThanOrEqual,
     In,
     InputPartition,
     IsNotNull,
-    LessThan,
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from .. import schemas
-
-_INSIGHTS_SCHEMAS = {
-    "": schemas.RAW_INSIGHTS_DAILY,
-    "age,gender": schemas.RAW_INSIGHTS_DEMO,
-    "region": schemas.RAW_INSIGHTS_GEO,
-}
+from .meta_rest import (
+    AD_FIELDS,
+    INSIGHT_FIELDS,
+    INSIGHTS_SCHEMAS,
+    FakeMetaTransport,
+    drain,
+    edge_params,
+    fetch_pages,
+)
 
 
 def _attr(f: Filter) -> str:
     return ".".join(f.attribute)
+
+
+def _breakdowns(options: dict) -> tuple[str, ...]:
+    return tuple(b for b in options.get("breakdowns", "").split(",") if b)
 
 
 class MetaAdsDataSource(DataSource):
@@ -76,7 +78,7 @@ class MetaAdsDataSource(DataSource):
 
     def schema(self) -> StructType:
         if self.options.get("edge", "ads") == "insights":
-            return _INSIGHTS_SCHEMAS[self.options.get("breakdowns", "")]
+            return INSIGHTS_SCHEMAS[_breakdowns(self.options)]
         return schemas.RAW_ADS
 
     def reader(self, schema: StructType) -> "MetaEdgeReader":
@@ -87,11 +89,9 @@ class MetaEdgeReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.user_schema = schema
         self.edge = options.get("edge", "ads")
-        self.breakdowns = tuple(
-            b for b in options.get("breakdowns", "").split(",") if b
-        )
+        self.breakdowns = _breakdowns(options)
         self.page_size = int(options.get("pagesize", "1000" if self.edge != "ads" else "25"))
-        self.status_filter: list[str] | None = None
+        self.statuses: set[str] | None = None
         self.since: str | None = None
         self.until: str | None = None
         self.drop_null_dates = False
@@ -105,30 +105,19 @@ class MetaEdgeReader(DataSourceReader):
         # driver-side module state.
         rejected: list[Filter] = []
         for f in filters:
+            on_date = self.edge == "insights" and _attr(f) == "date_start"
             if (
                 self.edge == "ads"
                 and isinstance(f, (In, EqualTo))
                 and _attr(f) == "effective_status"
             ):
-                vals = list(f.value) if isinstance(f, In) else [f.value]
-                self.status_filter = [str(v) for v in vals]
-            elif (
-                self.edge == "insights"
-                and isinstance(f, (GreaterThan, GreaterThanOrEqual))
-                and _attr(f) == "date_start"
-            ):
-                self.since = str(f.value)
-            elif (
-                self.edge == "insights"
-                and isinstance(f, (LessThan, LessThanOrEqual))
-                and _attr(f) == "date_start"
-            ):
-                self.until = str(f.value)
-            elif (
-                self.edge == "insights"
-                and isinstance(f, IsNotNull)
-                and _attr(f) == "date_start"
-            ):
+                vals = {str(v) for v in (f.value if isinstance(f, In) else [f.value])}
+                self.statuses = vals if self.statuses is None else self.statuses & vals
+            elif on_date and isinstance(f, GreaterThanOrEqual):
+                self.since = max(self.since or "", str(f.value))
+            elif on_date and isinstance(f, LessThanOrEqual):
+                self.until = min(self.until or "9999-12-31", str(f.value))
+            elif on_date and isinstance(f, IsNotNull):
                 # Spark emits IsNotNull alongside range predicates; the
                 # endpoint's time_range never returns null dates, and we
                 # enforce it below for the pushed-alone case.
@@ -137,64 +126,33 @@ class MetaEdgeReader(DataSourceReader):
                 rejected.append(f)  # not pushable -> Spark evaluates it
         return rejected
 
-    # -- planning -----------------------------------------------------------
-    def _fetch_all(self) -> list[dict]:
-        from .meta_rest import FakeMetaTransport
-
+    # -- planning: the one fetch of the scan ---------------------------------
+    def partitions(self) -> Sequence[InputPartition]:
         t = FakeMetaTransport()
-        params: dict = {"limit": 1_000_000_000}
         if self.edge == "ads":
-            if self.status_filter is not None:
-                params["filtering"] = [
-                    {
-                        "field": "ad.effective_status",
-                        "operator": "IN",
-                        "value": self.status_filter,
-                    }
-                ]
-            pages = t.get_ads([f.name for f in schemas.RAW_ADS.fields], params)
+            statuses = None if self.statuses is None else sorted(self.statuses)
+            params = edge_params(self.page_size, statuses=statuses)
+            pages = fetch_pages(t.get_ads, AD_FIELDS, params)
         else:
-            params["breakdowns"] = list(self.breakdowns)
+            time_range = None
             if self.since or self.until:
-                params["time_range"] = {
+                time_range = {
                     "since": self.since or "0000-01-01",
                     "until": self.until or "9999-12-31",
                 }
-            from .meta_rest import INSIGHT_FIELDS
-
-            pages = t.get_insights(INSIGHT_FIELDS, params)
-        rows: list[dict] = []
-        for page in pages:
-            rows.extend(page)
+            params = edge_params(
+                self.page_size, breakdowns=self.breakdowns, time_range=time_range
+            )
+            pages = fetch_pages(t.get_insights, INSIGHT_FIELDS, params)
         if self.drop_null_dates:
-            rows = [r for r in rows if r.get("date_start") is not None]
-        return rows
+            pages = [[r for r in p if r.get("date_start") is not None] for p in pages]
+        return [InputPartition(page) for page in pages]
 
-    def partitions(self) -> Sequence[InputPartition]:
-        # One partition per API page. The fake transport is deterministic,
-        # so the count is derived from the filtered row count; a cursor API
-        # would take page tokens from paging metadata instead.
-        n_rows = len(self._fetch_all())
-        n_pages = max(1, math.ceil(n_rows / self.page_size))
-        return [InputPartition(p) for p in range(n_pages)]
-
-    # -- execution (runs on executors) --------------------------------------
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        page = partition.value
-        rows = self._fetch_all()[page * self.page_size : (page + 1) * self.page_size]
-
-        def cell(row: dict, field) -> object:
-            v = row.get(field.name)
-            if v is None:
-                return None
-            if field.name in ("adset", "campaign"):
-                return (v.get("id"), v.get("name"))
-            if field.name in ("actions", "action_values"):
-                return [(a.get("action_type"), a.get("value")) for a in v]
-            return v
-
-        for r in rows:
-            yield tuple(cell(r, f) for f in self.user_schema.fields)
+    # -- execution (runs on executors): encode the partition's page ---------
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
+        yield pa.RecordBatch.from_pylist(
+            partition.value, schema=to_arrow_schema(self.user_schema)
+        )
 
 
 def register_meta_source(spark) -> None:
@@ -217,21 +175,12 @@ class MetaInsightsStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, schema: StructType, options: dict) -> None:
         self.user_schema = schema
-        self.breakdowns = tuple(
-            b for b in options.get("breakdowns", "").split(",") if b
-        )
+        self.breakdowns = _breakdowns(options)
 
     def _rows_by_day(self) -> list[tuple[str, list[dict]]]:
-        from .meta_rest import INSIGHT_FIELDS, FakeMetaTransport
-
-        t = FakeMetaTransport()
-        rows: list[dict] = []
-        for page in t.get_insights(
-            INSIGHT_FIELDS, {"limit": 1_000_000_000, "breakdowns": list(self.breakdowns)}
-        ):
-            rows.extend(page)
+        params = edge_params(1000, breakdowns=self.breakdowns)
         by_day: dict[str, list[dict]] = {}
-        for r in rows:
+        for r in drain(FakeMetaTransport().get_insights, INSIGHT_FIELDS, params):
             by_day.setdefault(r["date_start"], []).append(r)
         return sorted(by_day.items())
 
@@ -240,24 +189,10 @@ class MetaInsightsStreamReader(SimpleDataSourceStreamReader):
 
     def _emit(self, days: list[tuple[str, list[dict]]]) -> list[tuple]:
         # Materialized list, not a generator: Spark's simple-stream wrapper
-        # copy.copy()s the returned iterator to support replay.
-        out: list[tuple] = []
-        for _, rows in days:
-            for r in rows:
-                out.append(
-                    tuple(
-                        [
-                            (a.get("action_type"), a.get("value"))
-                            for a in (v or [])
-                        ]
-                        if f.name in ("actions", "action_values")
-                        else v
-                        for f, v in (
-                            (f, r.get(f.name)) for f in self.user_schema.fields
-                        )
-                    )
-                )
-        return out
+        # copy.copy()s the returned iterator to support replay.  Nested
+        # struct values stay dicts; Spark's row converter takes them by name.
+        names = self.user_schema.names
+        return [tuple(r.get(n) for n in names) for _, rows in days for r in rows]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         days = self._rows_by_day()
@@ -282,7 +217,7 @@ class MetaInsightsStreamSource(DataSource):
         return "meta_insights_stream"
 
     def schema(self) -> StructType:
-        return _INSIGHTS_SCHEMAS[self.options.get("breakdowns", "")]
+        return INSIGHTS_SCHEMAS[_breakdowns(self.options)]
 
     def simpleStreamReader(self, schema: StructType) -> MetaInsightsStreamReader:
         return MetaInsightsStreamReader(schema, dict(self.options))
@@ -291,92 +226,3 @@ class MetaInsightsStreamSource(DataSource):
 def register_meta_stream_source(spark) -> None:
     """Idempotently register the streaming short name with a session."""
     spark.dataSource.register(MetaInsightsStreamSource)
-
-
-@dataclass
-class _ChunkCommit(WriterCommitMessage):
-    """Per-task commit message: what this writer staged."""
-
-    task_rows: int = 0
-    chunk_files: tuple[str, ...] = ()
-
-
-class MetaLoadWriter(DataSourceWriter):
-    """Staged-commit batch writer — the reference's load protocol
-    (stage in chunks of ``batchsize``, then one atomic commit;
-    load.py:42-46 + 94-119) as a DataSource V2 writer.
-
-    Each task stages its rows in ``batchsize`` chunks under
-    ``<path>/_staging`` and reports them in its commit message; ``commit``
-    (driver, runs once, only if EVERY task succeeded) publishes a manifest
-    listing all chunks — readers treat manifest presence as visibility, so
-    a failed job leaves only invisible staging files for ``abort`` to
-    clean.  On a JDBC target the same protocol is stage-table + one MERGE.
-    """
-
-    def __init__(self, schema: StructType, options: dict) -> None:
-        self.path = options["path"]
-        self.batch_size = int(options.get("batchsize", "5000"))
-        self.fields = [f.name for f in schema.fields]
-
-    def write(self, iterator) -> _ChunkCommit:
-        import json
-        import os
-        import uuid
-
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        files: list[str] = []
-        rows_out = 0
-        chunk: list[dict] = []
-
-        def flush() -> None:
-            nonlocal chunk
-            if not chunk:
-                return
-            fname = os.path.join(staging, f"chunk-{uuid.uuid4().hex}.jsonl")
-            with open(fname, "w") as fh:
-                for r in chunk:
-                    fh.write(json.dumps(r, default=str) + "\n")
-            files.append(fname)
-            chunk = []
-
-        for row in iterator:
-            chunk.append({k: row[k] for k in self.fields})
-            rows_out += 1
-            if len(chunk) >= self.batch_size:
-                flush()
-        flush()
-        return _ChunkCommit(task_rows=rows_out, chunk_files=tuple(files))
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-
-        total = sum(m.task_rows for m in messages if m)
-        chunks = [f for m in messages if m for f in m.chunk_files]
-        manifest = {"total_rows": total, "chunks": sorted(chunks)}
-        with open(os.path.join(self.path, "_manifest.json"), "w") as fh:
-            json.dump(manifest, fh)
-
-    def abort(self, messages) -> None:
-        import os
-        import shutil
-
-        shutil.rmtree(os.path.join(self.path, "_staging"), ignore_errors=True)
-
-
-class MetaLoadSink(DataSource):
-    """``df.write.format("meta_load").option("path", ...)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "meta_load"
-
-    def writer(self, schema: StructType, overwrite: bool) -> MetaLoadWriter:
-        return MetaLoadWriter(schema, dict(self.options))
-
-
-def register_meta_sink(spark) -> None:
-    """Idempotently register the sink short name with a session."""
-    spark.dataSource.register(MetaLoadSink)

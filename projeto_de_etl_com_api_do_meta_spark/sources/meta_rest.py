@@ -11,7 +11,15 @@ time_range (partition pruning), level/breakdowns (aggregate pushdown) — is
 executed by the endpoint, exactly as the reference pushes it to Meta's
 servers (extract.py:125-128,199-207).
 
-The correlated per-form leads scan (S3) runs as ``mapInPandas`` over a
+Every reader of the three edges goes through this module: ``edge_params``
+is the one spec -> request-params mapping and ``fetch_pages`` the one page
+loop every transport call runs through (the place for ROADMAP item 2's
+retry/backoff and cursor resume).  Rows are dicts keyed by field name,
+encoded against the schema contract by name (``to_arrow_schema`` +
+``from_pylist``; absent keys are NULL).  ``sources/meta_dsv2.py`` is a thin
+Spark adapter over the same path.
+
+The correlated per-form leads scan (S3) runs as ``mapInArrow`` over a
 DataFrame of form ids: each partition issues its own transport calls, so at
 scale the fan-out is executor-parallel with no driver materialization
 (reference: a serial driver loop, extract.py:76-93).  Each evaluation of
@@ -26,9 +34,8 @@ interface (the SDK is not installed in this environment — import-gated).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -118,13 +125,47 @@ LEAD_FIELDS = [
     "ad_platform_data",
 ]
 
-_BREAKDOWN_SCHEMAS = {
+INSIGHTS_SCHEMAS = {
     (): schemas.RAW_INSIGHTS_DAILY,
     ("age", "gender"): schemas.RAW_INSIGHTS_DEMO,
     ("region",): schemas.RAW_INSIGHTS_GEO,
 }
 
 _FORMS = StructType().add("form_id", "string")
+
+
+def edge_params(
+    limit: int,
+    statuses: Iterable[str] | None = None,
+    breakdowns: Iterable[str] | None = None,
+    time_range: dict | None = None,
+) -> dict:
+    """Request params of one edge scan: the page size, the status IN-filter
+    (ads edge, extract.py:125-128), the per-ad daily aggregation with its
+    breakdowns (insights edge, extract.py:199-207) and the time_range."""
+    params: dict = {"limit": limit}
+    if statuses is not None:
+        params["filtering"] = [
+            {"field": "ad.effective_status", "operator": "IN", "value": list(statuses)}
+        ]
+    if breakdowns is not None:
+        params.update(level="ad", time_increment=1, breakdowns=list(breakdowns))
+    if time_range:
+        params["time_range"] = time_range
+    return params
+
+
+def fetch_pages(get: Callable[..., Iterable[list[dict]]], *args) -> list[list[dict]]:
+    """Every page of the paged transport call ``get(*args)``, in order.
+
+    The one page loop: every transport call in ``sources/`` runs through
+    here, so retry/backoff and resume-from-cursor belong here."""
+    return list(get(*args))
+
+
+def drain(get: Callable[..., Iterable[list[dict]]], *args) -> list[dict]:
+    """Every row of ``fetch_pages(get, *args)``, in page order."""
+    return [r for page in fetch_pages(get, *args) for r in page]
 
 
 def _rows_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
@@ -147,17 +188,8 @@ class MetaRestSource:
         self,
         statuses: tuple[str, ...] = ("ACTIVE", "PAUSED", "PENDING_REVIEW"),
     ) -> DataFrame:
-        params = {
-            "limit": 1000,
-            "filtering": [
-                {
-                    "field": "ad.effective_status",
-                    "operator": "IN",
-                    "value": list(statuses),
-                }
-            ],
-        }
-        rows = [r for page in self.transport.get_ads(AD_FIELDS, params) for r in page]
+        params = edge_params(1000, statuses=statuses)
+        rows = drain(self.transport.get_ads, AD_FIELDS, params)
         return _rows_frame(self.spark, rows, schemas.RAW_ADS)
 
     # -- S2: aggregated scan (extract.py:190-229) ----------------------------
@@ -166,41 +198,26 @@ class MetaRestSource:
         breakdowns: tuple[str, ...] = (),
         time_range: dict | None = None,
     ) -> DataFrame:
-        params: dict = {
-            "level": "ad",
-            "time_increment": 1,
-            "limit": 1000,
-            "breakdowns": list(breakdowns),
-        }
-        if time_range:
-            params["time_range"] = time_range
-        pages = self.transport.get_insights(INSIGHT_FIELDS, params)
-        rows = [r for page in pages for r in page]
-        return _rows_frame(self.spark, rows, _BREAKDOWN_SCHEMAS[breakdowns])
+        params = edge_params(1000, breakdowns=breakdowns, time_range=time_range)
+        rows = drain(self.transport.get_insights, INSIGHT_FIELDS, params)
+        return _rows_frame(self.spark, rows, INSIGHTS_SCHEMAS[breakdowns])
 
     # -- S3: correlated per-form scan, executor-parallel (extract.py:60-100) -
     def read_leads(self, time_range: dict | None = None) -> DataFrame:
-        form_pages = self.transport.get_lead_gen_forms(["id"], {"limit": 100})
-        form_ids = [r["id"] for page in form_pages for r in page]
+        forms = drain(self.transport.get_lead_gen_forms, ["id"], edge_params(100))
         forms_df = _rows_frame(
-            self.spark, [{"form_id": f} for f in form_ids], _FORMS
-        ).repartition(max(1, min(len(form_ids), 8)), "form_id")
+            self.spark, [{"form_id": r["id"]} for r in forms], _FORMS
+        ).repartition(max(1, min(len(forms), 8)), "form_id")
 
         transport = self.transport
-        lead_cols = list(LEAD_FIELDS)
+        params = edge_params(100, time_range=time_range)
+        leads_schema = to_arrow_schema(schemas.RAW_LEADS)
 
-        def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            params: dict = {"limit": 100}
-            if time_range:
-                params["time_range"] = time_range
+        def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                for form_id in batch["form_id"]:
-                    rows = [
-                        r
-                        for page in transport.get_leads(form_id, lead_cols, params)
-                        for r in page
-                    ]
+                for form_id in batch.column("form_id").to_pylist():
+                    rows = drain(transport.get_leads, form_id, LEAD_FIELDS, params)
                     if rows:
-                        yield pd.DataFrame(rows, columns=lead_cols)
+                        yield pa.RecordBatch.from_pylist(rows, schema=leads_schema)
 
-        return forms_df.mapInPandas(fetch, schema=schemas.RAW_LEADS)
+        return forms_df.mapInArrow(fetch, schema=schemas.RAW_LEADS)

@@ -15,10 +15,11 @@ rest of the package never imports this module implicitly.  Credentials come
 from the same env-var names the reference reads from ``.env``
 (extract.py:15-18): APP_ID, APP_SECRET, ACCESS_TOKEN, AD_ACCOUNT_ID.
 
-Scale posture: the transport yields one *page* (cursor batch) at a time, so
-the executor-parallel leads fan-out in ``MetaRestSource.read_leads``
-(mapInPandas over form ids) streams pages without materializing an edge in
-memory; only the page size (``limit``) is resident per call.
+Scale posture: the transport yields one *page* (cursor batch) at a time;
+every caller drains it through ``meta_rest.fetch_pages``, the one page loop.
+The executor-parallel leads fan-out in ``MetaRestSource.read_leads``
+(mapInArrow over form ids) holds one form's leads at a time, never the
+whole edge.
 """
 
 from __future__ import annotations
@@ -59,7 +60,7 @@ def _cursor_pages(cursor, limit: int) -> Iterator[list[dict]]:
 
 class RealMetaTransport:
     """facebook_business-backed transport (same interface as
-    ``FakeMetaTransport``, sources/meta_rest.py:32).
+    ``meta_rest.FakeMetaTransport``).
 
     Parameters mirror the reference's env contract (extract.py:15-18); any
     omitted credential falls back to the corresponding environment variable.

@@ -518,11 +518,10 @@ def incremental_exact_dedup(
     store by fingerprint — at scale a bucketed/bloom-fronted lookup).
 
     Returns the started streaming query (AvailableNow)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ..operators.text import fingerprint_md5
+    from ..sinks.upsert import recover_dir
 
     docs_schema = (
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -542,7 +541,7 @@ def incremental_exact_dedup(
         batch = batch_df.groupBy("fingerprint").agg(
             F.min("doc_id").alias("doc_id")
         )
-        if os.path.exists(store_path):
+        if recover_dir(store_path):
             seen = spark.read.parquet(store_path).select("fingerprint")
             batch = batch.join(seen, "fingerprint", "left_anti")
         batch.select("doc_id", "fingerprint").write.mode("append").parquet(
@@ -575,7 +574,7 @@ def compact_store(
     so no concurrent reader exists during the swap.  The swap is
     ``sinks/upsert.py: swap_dir``, the one ``parquet_upsert`` uses: a crash
     between its two renames leaves the store at ``<path>.old``, which the
-    next swap of the same path renames back."""
+    next read of the store (``recover_dir``) renames back."""
     from ..sinks.upsert import swap_dir
 
     def compact(df):
@@ -620,12 +619,11 @@ def incremental_neardup_suppress(
     is the windowed-suppression contract (a dup of a long-gone document is
     readmitted), so it is None in the oracle-verified registry query and an
     explicit opt-in for production retention policies."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..queries.dedup_crossengine import md5_lsh_bands, md5_lsh_signatures
+    from ..sinks.upsert import recover_dir
 
     docs_schema = (
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -648,7 +646,7 @@ def incremental_neardup_suppress(
             .groupBy("doc_id")
             .agg(F.min("bucket_min").alias("sup"))
         )
-        if os.path.exists(store_path):
+        if recover_dir(store_path):
             store = spark.read.parquet(store_path)
             sup_store = (
                 bands.join(store, ["band_id", "bh"])
@@ -687,7 +685,7 @@ def incremental_neardup_suppress(
             F.min("doc_id").alias("first_doc"),
             F.lit(int(batch_id)).alias("batch_seen"),
         )
-        if os.path.exists(store_path):
+        if recover_dir(store_path):
             new_buckets = new_buckets.join(
                 spark.read.parquet(store_path).select("band_id", "bh"),
                 ["band_id", "bh"],

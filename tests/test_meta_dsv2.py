@@ -12,9 +12,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from projeto_de_etl_com_api_do_meta_spark import schemas
 from projeto_de_etl_com_api_do_meta_spark.sources.meta_dsv2 import (
+    MetaEdgeReader,
     register_meta_source,
 )
+from projeto_de_etl_com_api_do_meta_spark.sources.meta_rest import FakeMetaTransport
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -70,6 +73,73 @@ def test_insights_time_range_pushdown(spark):
     assert all(lo <= r.date_start <= hi for r in pushed)
     manual = [r for r in base.collect() if lo <= r.date_start <= hi]
     assert len(pushed) == len(manual)
+
+
+# (edge, filters applied one .where() after another, the same predicate in
+# Python).  Strict date bounds are not the endpoint's inclusive time_range,
+# and a repeated predicate narrows the earlier one.
+_PUSHDOWN_CASES = {
+    "date_gt": (
+        "insights",
+        [lambda c: c("date_start") > "2024-03-10"],
+        lambda r: r.date_start > "2024-03-10",
+    ),
+    "date_lt": (
+        "insights",
+        [lambda c: c("date_start") < "2024-03-03"],
+        lambda r: r.date_start < "2024-03-03",
+    ),
+    "date_ge_twice": (
+        "insights",
+        [lambda c: c("date_start") >= "2024-03-10",
+         lambda c: c("date_start") >= "2024-03-02"],
+        lambda r: r.date_start >= "2024-03-10" and r.date_start >= "2024-03-02",
+    ),
+    "status_in_then_eq": (
+        "ads",
+        [lambda c: c("effective_status").isin("ACTIVE", "PAUSED"),
+         lambda c: c("effective_status") == "ARCHIVED"],
+        lambda r: r.effective_status in ("ACTIVE", "PAUSED")
+        and r.effective_status == "ARCHIVED",
+    ),
+    "status_eq_then_in": (
+        "ads",
+        [lambda c: c("effective_status") == "ARCHIVED",
+         lambda c: c("effective_status").isin("ACTIVE", "PAUSED")],
+        lambda r: r.effective_status == "ARCHIVED"
+        and r.effective_status in ("ACTIVE", "PAUSED"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PUSHDOWN_CASES))
+def test_pushed_scan_equals_spark_side_filter(spark, case):
+    edge, filters, keep = _PUSHDOWN_CASES[case]
+    base = spark.read.format("meta_ads").option("edge", edge).load()
+    pushed = base
+    for f in filters:
+        pushed = pushed.where(f(F.col))
+    manual = [r for r in base.collect() if keep(r)]
+    assert sorted(map(str, pushed.collect())) == sorted(map(str, manual))
+
+
+def test_scan_calls_the_transport_once(monkeypatch):
+    """Pages are fetched once, at planning; ``read`` only encodes a page."""
+    calls = []
+    get_ads = FakeMetaTransport.get_ads
+
+    def counting(self, fields, params):
+        calls.append(params)
+        return get_ads(self, fields, params)
+
+    monkeypatch.setattr(FakeMetaTransport, "get_ads", counting)
+    reader = MetaEdgeReader(schemas.RAW_ADS, {"pagesize": "25"})
+    parts = reader.partitions()
+    n_rows = sum(
+        getattr(out, "num_rows", 1) for p in parts for out in reader.read(p)
+    )
+    assert (len(parts), n_rows) == (3, 70)
+    assert len(calls) == 1
 
 
 def test_insights_breakdown_schema(spark):
@@ -128,35 +198,3 @@ def test_stream_source_parity_and_batching(spark, tmp_path):
     # restart on the same checkpoint: no new days -> no duplicate ingestion
     run_once()
     assert spark.read.parquet(out).count() == batch.count()
-
-
-def test_dsv2_writer_staged_commit(spark, tmp_path):
-    import json
-
-    from projeto_de_etl_com_api_do_meta_spark.sources.meta_dsv2 import (
-        register_meta_sink,
-    )
-
-    register_meta_sink(spark)
-    target = tmp_path / "load"
-    target.mkdir()
-    df = spark.range(0, 12_345).selectExpr(
-        "CAST(id AS STRING) AS ad_id", "id * 2 AS clicks"
-    )
-    (
-        df.repartition(4)
-        .write.format("meta_load")
-        .option("path", str(target))
-        .option("batchsize", "1000")
-        .mode("append")
-        .save()
-    )
-    manifest = json.loads((target / "_manifest.json").read_text())
-    assert manifest["total_rows"] == 12_345
-    # chunking honors batchsize: 4 tasks x ceil(rows_per_task/1000) chunks
-    assert len(manifest["chunks"]) >= 13
-    staged_rows = 0
-    for chunk in manifest["chunks"]:
-        with open(chunk) as fh:
-            staged_rows += sum(1 for _ in fh)
-    assert staged_rows == 12_345

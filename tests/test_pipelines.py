@@ -11,6 +11,7 @@ from projeto_de_etl_com_api_do_meta_spark.plans.pipelines import (
     run_dimension,
     run_lead_insights,
 )
+from projeto_de_etl_com_api_do_meta_spark.sources import meta_fixtures
 from projeto_de_etl_com_api_do_meta_spark.sources.meta_rest import (
     FakeMetaTransport,
     MetaRestSource,
@@ -120,3 +121,67 @@ def test_source_frames_scan_without_python_workers(source):
     for df in (source.read_ads(), source.read_insights(("region",))):
         lineage = df._jdf.queryExecution().toRdd().toDebugString()
         assert "PythonRDD" not in lineage, lineage
+
+
+def test_source_sends_the_transport_the_same_calls(spark, tmp_path):
+    """``(method, fields, params)`` of every transport call each reader
+    makes.  The leads fan-out calls from executors, so calls are logged to a
+    file rather than kept in memory."""
+    import json
+
+    log = str(tmp_path / "calls.jsonl")
+
+    class Recording(FakeMetaTransport):
+        def _record(self, *call):
+            with open(log, "a") as fh:
+                fh.write(json.dumps(call) + "\n")
+
+        def get_ads(self, fields, params):
+            self._record("get_ads", fields, params)
+            return super().get_ads(fields, params)
+
+        def get_insights(self, fields, params):
+            self._record("get_insights", fields, params)
+            return super().get_insights(fields, params)
+
+        def get_lead_gen_forms(self, fields, params):
+            self._record("get_lead_gen_forms", fields, params)
+            return super().get_lead_gen_forms(fields, params)
+
+        def get_leads(self, form_id, fields, params):
+            self._record("get_leads", form_id, fields, params)
+            return super().get_leads(form_id, fields, params)
+
+    def calls(read) -> list:
+        open(log, "w").close()
+        read().collect()
+        with open(log) as fh:
+            return sorted((json.loads(line) for line in fh), key=json.dumps)
+
+    src = MetaRestSource(spark, Recording())
+    ins = ["ad_id", "adset_id", "campaign_id", "impressions", "clicks", "spend",
+           "actions", "action_values"]
+    daily = {"level": "ad", "time_increment": 1, "limit": 1000}
+    tr = {"since": "2024-03-02", "until": "2024-03-04"}
+    assert calls(src.read_ads) == [[
+        "get_ads",
+        ["id", "name", "adset_id", "adset", "campaign_id", "campaign",
+         "effective_status"],
+        {"limit": 1000, "filtering": [{
+            "field": "ad.effective_status", "operator": "IN",
+            "value": ["ACTIVE", "PAUSED", "PENDING_REVIEW"]}]},
+    ]]
+    assert calls(lambda: src.read_insights(())) == [
+        ["get_insights", ins, {**daily, "breakdowns": []}]]
+    assert calls(lambda: src.read_insights(("age", "gender"))) == [
+        ["get_insights", ins, {**daily, "breakdowns": ["age", "gender"]}]]
+    assert calls(lambda: src.read_insights(("region",), tr)) == [
+        ["get_insights", ins, {**daily, "breakdowns": ["region"], "time_range": tr}]]
+    leads = ["lead_id", "created_time", "ad_id", "campaign_id", "adset_id",
+             "form_id", "field_data", "ad_platform_data"]
+    forms = [r["id"] for r in meta_fixtures.gen_forms()]
+    assert calls(lambda: src.read_leads(tr)) == sorted(
+        [["get_lead_gen_forms", ["id"], {"limit": 100}]]
+        + [["get_leads", f, leads, {"limit": 100, "time_range": tr}] for f in forms],
+        key=json.dumps,
+    )

@@ -366,3 +366,61 @@ def test_available_now_resumes_from_checkpoint(spark, tmp_path):
     row2, in2 = run_once()
     assert (row2.n, row2.s) == (5, 150)  # state covers full history
     assert in2 == 2  # ...but only the NEW files were read
+
+
+def test_incremental_stores_recover_an_interrupted_swap(spark, tmp_path):
+    """A crash between ``compact_store``'s two renames leaves each store at
+    ``<store>.old``.  The next batch must read it back: a document that
+    repeats an earlier one stays suppressed and the store keeps its rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projeto_de_etl_com_api_do_meta_spark.streaming.windows import (
+        incremental_exact_dedup,
+        incremental_neardup_suppress,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    stream_dir = tmp_path / "docs"
+    stream_dir.mkdir()
+
+    def add_chunk(k, docs):
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+                "text": [t for _, t in docs],
+                "lang": ["en"] * len(docs),
+                "source": ["web"] * len(docs),
+                "n_chars": pa.array([len(t) for _, t in docs], pa.int64()),
+            }),
+            str(stream_dir / f"chunk-{k}.parquet"),
+        )
+
+    exact, near = str(tmp_path / "fp_store"), str(tmp_path / "band_store")
+    results = str(tmp_path / "results")
+
+    def run_both():
+        for q in (
+            incremental_exact_dedup(
+                spark, str(stream_dir), exact, str(tmp_path / "ckpt_exact")
+            ),
+            incremental_neardup_suppress(
+                spark, str(stream_dir), near, results, str(tmp_path / "ckpt_near")
+            ),
+        ):
+            q.awaitTermination()
+
+    add_chunk(0, [(1, text), (2, "an entirely different sentence about other things")])
+    run_both()
+    before = {p: sorted(map(str, spark.read.parquet(p).collect())) for p in (exact, near)}
+    for p in (exact, near):
+        os.rename(p, p + ".old")
+
+    add_chunk(1, [(3, text)])
+    run_both()
+    for p in (exact, near):
+        assert not os.path.exists(p + ".old")
+        after = sorted(map(str, spark.read.parquet(p).collect()))
+        assert after == before[p], p  # doc 3 added nothing new
+    verdict = spark.read.parquet(results).where("doc_id = 3").first()
+    assert (verdict.is_kept, verdict.suppressor) == (False, 1)
