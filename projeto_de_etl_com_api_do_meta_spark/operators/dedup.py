@@ -1,28 +1,62 @@
-"""Deduplication operators for LLM-data pipelines (driver north star):
-exact dedup, n-gram Jaccard near-dup, MinHash+LSH near-dup, SimHash near-dup.
+"""Deduplication operators for LLM-data pipelines (driver north star): the
+one home of every near-duplicate step.  Queries compose these steps; none
+writes its own copy.
 
-Scale design:
-- Exact dedup = hash-groupBy (or window keep-first) on a fingerprint — one
-  shuffle on the fingerprint, no data movement of full texts needed beyond it.
-- N-gram Jaccard = shingle explode + equi-join on shingle: fully relational,
-  shuffles on the shingle key.  Quadratic only within a shingle's posting
-  list — the classic positional-join formulation that survives scale-out.
-  Hot-shingle mitigation is CODE: dedup_ngram_jaccard_capped drops df>cap
-  shingles consistently from every set before the join (pair work per
-  shingle bounded by cap²), value-exact against its SQL oracle.
-- MinHash = one explode + one groupBy computing k mins simultaneously
-  (k agg columns, single shuffle); LSH banding turns near-dup search into an
-  equi-join on (band_id, band_hash) — never an all-pairs product.
+Core steps:
+
+- :func:`shingle_posting` — the (doc_id, shingle) posting of distinct word
+  n-grams, the input of every shingle-based step.
+- :func:`shingle_overlap` — the exact posting self-join on the shingle:
+  (doc_a, doc_b, n_inter, size_a, size_b).  :func:`jaccard_pairs` and
+  :func:`containment_pairs` add only their score and filter.
+- MinHash-LSH — :func:`posting_signatures` (the k-min aggregate),
+  :func:`lsh_bands` and :func:`lsh_candidate_pairs` (banding and the
+  (band_id, bh) equi-join), :func:`signature_matches` /
+  :func:`match_signatures` (the verify count).
+- :func:`simhash_near_dup` — the pigeonhole block join with a Hamming filter.
+- Prefix filtering — the md5-order prefix and the ``array_intersect`` verify
+  shared by :func:`prefix_jaccard_pairs` and
+  :func:`containment_prefix_pairs`.
+- :func:`connected_components` / :func:`connected_components_star` — dedup
+  clusters from near-dup pairs.
+
+Hash families (:class:`HashFamily`, the one argument that switches a
+pipeline between them):
+
+- :data:`MURMUR3` — ``F.hash``, the cheapest JVM-codegen hash.  No other
+  engine reproduces it, so its registry queries are rows-only.  The
+  production and benchmark path.
+- :data:`MD5` — built on ``text.md5_u32``, which DuckDB evaluates
+  bit-identically, so the md5-family queries are value-checked against SQL
+  oracles.  md5 is ~2-4x slower per call; the plan shapes are the same.
+  Its LSH shape (``MD5_K``, ``MD5_BANDS``, ``MD5_ROWS``, ``MD5_MIN_MATCH``)
+  is shared with those oracles.
+
+Scale design: exact dedup is one hash-groupBy on a fingerprint.  Every pair
+generator is an equi-join — on the shingle, the (band_id, bh) bucket, the
+SimHash block or a prefix shingle — never an all-pairs product, quadratic
+only within one key's list.  Hot-shingle mitigation is code:
+:func:`jaccard_pairs_capped` drops df>cap shingles from every set before
+pair generation (pair work per shingle bounded by cap²).
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .text import fingerprint_md5, tokens
+from .text import (
+    fingerprint_md5,
+    hamming64,
+    md5_u32,
+    simhash32_md5,
+    simhash64,
+    tokens,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -132,34 +166,58 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity join: all pairs with J >= threshold.
+# -- Shingles and exact overlap -----------------------------------------------
 
-    Relational formulation: explode distinct shingles, equi-join on shingle,
-    count per pair = |intersection|, then |union| = |A| + |B| - |A∩B|.
-    """
-    sh = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
-    )
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_shingles"))
-    # explode the shingle EXPRESSION, not the aliased column: on a plain
-    # attribute, InferFiltersFromGenerate adds `size(shingles) > 0`, and
-    # predicate pushdown substitutes the full shingle expression below
-    # spread()'s Exchange — the whole corpus gets shingled a second time
-    # on the ONE pre-repartition input partition (measured 10x on the
-    # posting materialization, r11 optimization round).  The rule skips
-    # expensive generator inputs (SPARK-36715), so the inline form keeps
-    # the Generate above the exchange with no inferred filter.
-    posting = spread(df, id_col).select(
+
+def shingle_posting(
+    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """(doc_id, shingle) posting: one row per distinct word n-gram of each
+    document, spread by id (a doc below ``n`` tokens has no rows).
+
+    The explode takes the shingle EXPRESSION, never an aliased column: on a
+    plain attribute, InferFiltersFromGenerate adds ``size(shingles) > 0``,
+    and predicate pushdown substitutes the full shingle expression below
+    spread()'s Exchange — the whole corpus gets shingled a second time on
+    the ONE pre-repartition input partition (measured 10x on the posting
+    materialization).  The rule skips expensive generator inputs
+    (SPARK-36715), so the inline form keeps the Generate above the exchange
+    with no inferred filter; tests/test_dedup_ops.py checks the plan."""
+    return spread(df, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_shingles(text_col, n)).alias("shingle"),
     )
+
+
+def _shingle_sets(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, shingles) — each document's distinct shingle array."""
+    return spread(df, id_col).select(
+        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
+    )
+
+
+def _with_sizes(pairs: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter) pairs joined with both documents' shingle
+    counts from ``sizes`` (doc_id, n_shingles)."""
+    n = F.col("n_shingles")
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), n.alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), n.alias("size_b"))
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", "n_inter", "size_a", "size_b")
+    )
+
+
+def shingle_overlap(posting: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, size_a, size_b) for every pair of documents
+    that share a shingle, ``doc_a < doc_b``.
+
+    ``posting`` is a (doc_id, shingle) posting (:func:`shingle_posting`),
+    ``sizes`` holds (doc_id, n_shingles).  The posting self-join on the
+    shingle counts |A∩B| per pair; the only row-scale shuffle is on the
+    shingle key, never an all-pairs product.  Quadratic only within one
+    shingle's posting list."""
     a, b = posting.alias("a"), posting.alias("b")
     inter = (
         a.join(
@@ -172,26 +230,58 @@ def jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a")
+    return _with_sizes(inter, sizes)
+
+
+def _overlap(df: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """:func:`shingle_overlap` of ``df``'s documents, sized from their
+    shingle arrays."""
+    sizes = _shingle_sets(df, n, id_col, text_col).select(
+        "doc_id", F.size("shingles").alias("n_shingles")
     )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b")
+    return shingle_overlap(shingle_posting(df, n, id_col, text_col), sizes)
+
+
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Overlap pairs scored ``|A∩B| / (|A| + |B| - |A∩B|)`` (6 digits) and
+    kept at ``jaccard >= threshold``."""
+    jaccard = F.round(
+        F.col("n_inter").cast("double")
+        / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
+        6,
     )
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-                6,
-            ),
-        )
+    return (
+        pairs.withColumn("jaccard", jaccard)
         .where(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "n_inter", "size_a", "size_b", "jaccard")
     )
-    return out.select("doc_a", "doc_b", "n_inter", "size_a", "size_b", "jaccard")
+
+
+def _containment(pairs: DataFrame) -> DataFrame:
+    """Overlap pairs with both containments ``|A∩B|/|A|`` and ``|A∩B|/|B|``
+    (6 digits)."""
+    n_inter = F.col("n_inter").cast("double")
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        "n_inter",
+        "size_a",
+        "size_b",
+        F.round(n_inter / F.col("size_a"), 6).alias("cont_a"),
+        F.round(n_inter / F.col("size_b"), 6).alias("cont_b"),
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity join: all pairs with J >= threshold
+    (:func:`shingle_overlap`, then |union| = |A| + |B| - |A∩B|)."""
+    return _jaccard(_overlap(df, n, id_col, text_col), threshold)
 
 
 def containment_pairs(
@@ -206,62 +296,81 @@ def containment_pairs(
     mirror).  Catches doc-in-doc duplication — quotations, boilerplate
     wrappers, near-supersets — that symmetric Jaccard misses: a 50-gram
     chunk fully embedded in a 5000-gram page scores J ~ 0.01 but
-    containment 1.0.
-
-    Same posting-list equi-join scale shape as :func:`jaccard_pairs` (the
-    only row-scale shuffle is on the shingle key; no all-pairs product).
+    containment 1.0.  Same posting-list equi-join as :func:`jaccard_pairs`.
     """
-    sh = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
+    return _containment(_overlap(df, n, id_col, text_col)).where(
+        F.greatest("cont_a", "cont_b") >= threshold
     )
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_shingles"))
-    # explode the shingle EXPRESSION, not the aliased column: on a plain
-    # attribute, InferFiltersFromGenerate adds `size(shingles) > 0`, and
-    # predicate pushdown substitutes the full shingle expression below
-    # spread()'s Exchange — the whole corpus gets shingled a second time
-    # on the ONE pre-repartition input partition (measured 10x on the
-    # posting materialization, r11 optimization round).  The rule skips
-    # expensive generator inputs (SPARK-36715), so the inline form keeps
-    # the Generate above the exchange with no inferred filter.
-    posting = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col, n)).alias("shingle"),
-    )
-    a, b = posting.alias("a"), posting.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b")
-    )
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "cont_a", F.round(F.col("n_inter").cast("double") / F.col("size_a"), 6)
-        )
-        .withColumn(
-            "cont_b", F.round(F.col("n_inter").cast("double") / F.col("size_b"), 6)
-        )
-        .where(F.greatest("cont_a", "cont_b") >= threshold)
-    )
-    return out.select(
-        "doc_a", "doc_b", "n_inter", "size_a", "size_b", "cont_a", "cont_b"
-    )
+
+
+# -- Hash families ------------------------------------------------------------
+
+
+class HashFamily(NamedTuple):
+    """The hashes a near-dup pipeline runs on."""
+
+    #: MinHash ``h_i(shingle)``: (shingle column, i) -> integer
+    element: Callable[[Column, int], Column]
+    #: LSH bucket of one signature band (an array slice)
+    band: Callable[[Column], Column]
+    #: SimHash fingerprint of a text column
+    simhash: Callable[[Column], Column]
+    #: the 4 pigeonhole blocks of a fingerprint
+    blocks: Callable[[Column], list[Column]]
+    #: Hamming distance of two fingerprints
+    hamming: Callable[[Column, Column], Column]
+
+
+#: murmur3 (``F.hash``): 64-bit SimHash as a 16-digit hex string, 16-bit blocks
+MURMUR3 = HashFamily(
+    element=lambda s, i: F.hash(s, F.lit(i)),
+    band=F.hash,
+    simhash=lambda text: F.lpad(simhash64(text), 16, "0"),
+    blocks=lambda fp: [F.substring(fp, 1 + 4 * i, 4) for i in range(4)],
+    hamming=hamming64,
+)
+
+#: md5 (``md5_u32``): ``h_i(x) = md5_u32(i ':' x)``, the band bucket is the md5
+#: of the band's ':'-joined values, 32-bit SimHash as a long, 8-bit blocks
+MD5 = HashFamily(
+    element=lambda s, i: md5_u32(F.concat(F.lit(f"{i}:"), s)),
+    band=lambda band: F.md5(
+        F.array_join(F.transform(band, lambda v: v.cast("string")), ":")
+    ),
+    simhash=simhash32_md5,
+    blocks=lambda fp: [
+        F.shiftright(fp, 8 * j).bitwiseAND(F.lit(255)) for j in range(4)
+    ],
+    hamming=lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("long"),
+)
+
+#: the md5 family's LSH shape, shared with the DuckDB oracles: 16-min
+#: signatures in 4 bands of 4 rows, P(candidate) = 1-(1-j^4)^4, verified at
+#: >= 8/16 matching components (estimated Jaccard >= 0.5)
+MD5_K = 16
+MD5_BANDS = 4
+MD5_ROWS = MD5_K // MD5_BANDS
+MD5_MIN_MATCH = 8
 
 
 # -- MinHash + LSH -------------------------------------------------------------
+
+
+def posting_signatures(
+    posting: DataFrame, num_hashes: int = 64, family: HashFamily = MURMUR3
+) -> DataFrame:
+    """(doc_id, sig) k-permutation MinHash signatures of a (doc_id, shingle)
+    posting: one groupBy computing all k minima at once (k agg columns,
+    single shuffle).  Deterministic across runs and cluster layouts."""
+    mins = posting.groupBy("doc_id").agg(
+        *[
+            F.min(family.element(F.col("shingle"), i)).alias(f"h{i}")
+            for i in range(num_hashes)
+        ]
+    )
+    return mins.select(
+        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+    )
 
 
 def minhash_signatures(
@@ -270,47 +379,53 @@ def minhash_signatures(
     text_col: str = "text",
     n: int = 3,
     num_hashes: int = 64,
+    family: HashFamily = MURMUR3,
 ) -> DataFrame:
-    """k-permutation MinHash signature per document.
-
-    One explode + one groupBy computing all k minima at once (k agg columns,
-    single shuffle).  Hash family: murmur3 of (shingle, i) — deterministic
-    across runs and cluster layouts."""
-    posting = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), F.explode(word_shingles(text_col, n)).alias("s")
-    )
-    mins = posting.groupBy("doc_id").agg(
-        *[F.min(F.hash(F.col("s"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
+    """(doc_id, sig) MinHash signature per document: one explode + one
+    groupBy (docs with fewer than ``n`` tokens have no shingles and are
+    absent)."""
+    return posting_signatures(
+        shingle_posting(df, n, id_col, text_col), num_hashes, family
     )
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, bands: int = 16, rows_per_band: int = 4
+def lsh_bands(
+    sig_df: DataFrame,
+    bands: int = 16,
+    rows_per_band: int = 4,
+    family: HashFamily = MURMUR3,
 ) -> DataFrame:
-    """LSH banding: docs sharing any band hash become candidate pairs.
-
-    Equi-join on (band_id, band_hash): candidate generation is a shuffle
-    join, never an all-pairs comparison."""
-    banded = sig_df.select(
+    """(doc_id, band_id, bh) LSH band buckets of (doc_id, sig) signatures."""
+    return sig_df.select(
         "doc_id",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.hash(
-                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
+                lambda b: family.band(
+                    F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
                 ),
             )
-        ).alias("band_id", "band_hash"),
+        ).alias("band_id", "bh"),
     )
+
+
+def lsh_candidate_pairs(
+    sig_df: DataFrame,
+    bands: int = 16,
+    rows_per_band: int = 4,
+    family: HashFamily = MURMUR3,
+) -> DataFrame:
+    """LSH banding: docs sharing any band bucket become candidate pairs.
+
+    Equi-join on (band_id, bh): candidate generation is a shuffle join,
+    never an all-pairs comparison."""
+    banded = lsh_bands(sig_df, bands, rows_per_band, family)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
             b,
             (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.bh") == F.col("b.bh"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -318,58 +433,25 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash_near_dup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup pairs with Hamming distance <= ``max_hamming``.
+def signature_matches(sig_a: Column | str, sig_b: Column | str) -> Column:
+    """Number of equal components of two MinHash signatures (an int)."""
+    return F.size(
+        F.filter(
+            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
 
-    Pigeonhole blocking: split the 64-bit fingerprint into 4 16-bit blocks;
-    any pair within Hamming 3 must agree on at least one block, so candidate
-    generation is an equi-join on (block_id, block_value) — never all-pairs.
-    Exact for max_hamming <= 3 (4 blocks); use more blocks for larger radii.
-    """
-    from .text import hamming64, simhash64
 
-    # Persist: without it, projection collapse recomputes the (large) simhash
-    # expression once per exploded block row on BOTH join sides (8x per doc).
-    sigs = (
-        spread(df, id_col)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.lpad(simhash64(text_col), 16, "0").alias("sh"),
-        )
-        .persist()
-    )
-    blocks = sigs.select(
-        "doc_id",
-        "sh",
-        F.posexplode(
-            F.array(*[F.substring("sh", 1 + 4 * i, 4) for i in range(4)])
-        ).alias("block_id", "block_val"),
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.block_id") == F.col("b.block_id"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
+def match_signatures(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, ...) with ``n_match``, the
+    :func:`signature_matches` count of the two documents' signatures."""
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     return (
-        cands.withColumn("hamming", hamming64(F.col("sh_a"), F.col("sh_b")))
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(*pairs.columns, signature_matches("sig_a", "sig_b").alias("n_match"))
     )
 
 
@@ -382,28 +464,398 @@ def minhash_near_dup(
     bands: int = 16,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup: signatures -> banded candidates ->
-    signature-estimated Jaccard filter."""
+    """End-to-end murmur3 MinHash-LSH near-dup: signatures -> banded
+    candidates -> signature-estimated Jaccard filter."""
     # Signatures feed candidate generation AND both sides of the verify
     # join — persist once instead of recomputing the shingle explode 4x.
     # (At cluster scale this is a small table: |docs| x k ints.)
     sigs = minhash_signatures(df, id_col, text_col, n, num_hashes).persist()
     cands = lsh_candidate_pairs(sigs, bands, num_hashes // bands)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ).cast("double") / F.lit(num_hashes)
+    est = F.round(F.col("n_match").cast("double") / F.lit(num_hashes), 6)
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", F.round(est, 6))
+        match_signatures(cands, sigs)
+        .withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
+
+
+def md5_lsh_pairs(df: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_match) md5-family MinHash-LSH near-dup pairs in the
+    oracles' shape: ``MD5_K``-min signatures, ``MD5_BANDS`` x ``MD5_ROWS``
+    banded candidates, verified at ``n_match >= MD5_MIN_MATCH``.  Unsorted."""
+    sigs = minhash_signatures(df, num_hashes=MD5_K, family=MD5).persist()
+    cands = lsh_candidate_pairs(sigs, MD5_BANDS, MD5_ROWS, MD5)
+    return (
+        match_signatures(cands, sigs)
+        .select("doc_a", "doc_b", F.col("n_match").cast("long").alias("n_match"))
+        .where(F.col("n_match") >= MD5_MIN_MATCH)
+    )
+
+
+# -- SimHash --------------------------------------------------------------------
+
+
+def simhash_near_dup(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+    family: HashFamily = MURMUR3,
+) -> DataFrame:
+    """SimHash near-dup pairs (doc_a, doc_b, hamming) with Hamming distance
+    <= ``max_hamming``.
+
+    Pigeonhole blocking: split the fingerprint into 4 blocks; any pair
+    within Hamming 3 must agree on at least one block, so candidate
+    generation is an equi-join on (block_id, block_val) — never all-pairs.
+    Exact for max_hamming <= 3 (4 blocks); use more blocks for larger radii.
+    """
+    # Persist: without it, projection collapse recomputes the (large) simhash
+    # expression once per exploded block row on BOTH join sides (8x per doc).
+    fps = (
+        spread(df, id_col)
+        .select(
+            F.col(id_col).alias("doc_id"),
+            family.simhash(F.col(text_col)).alias("fp"),
+        )
+        .persist()
+    )
+    blocks = fps.select(
+        "doc_id",
+        "fp",
+        F.posexplode(F.array(*family.blocks(F.col("fp")))).alias(
+            "block_id", "block_val"
+        ),
+    )
+    a, b = blocks.alias("a"), blocks.alias("b")
+    cands = (
+        a.join(
+            b,
+            (F.col("a.block_id") == F.col("b.block_id"))
+            & (F.col("a.block_val") == F.col("b.block_val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("a.fp").alias("fp_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("b.fp").alias("fp_b"),
+        )
+        .distinct()
+    )
+    return (
+        cands.withColumn("hamming", family.hamming(F.col("fp_a"), F.col("fp_b")))
+        .where(F.col("hamming") <= max_hamming)
+        .select("doc_a", "doc_b", "hamming")
+    )
+
+
+# -- Prefix filtering -------------------------------------------------------------
+
+
+def _md5_prefix(length: Column) -> Column:
+    """The first ``length`` elements of ``shingles`` under the global
+    md5(shingle) order: sort (md5, shingle) structs and slice, all inside
+    codegen — no posting-list explode before the slice."""
+    by_hash = F.expr(
+        "transform(array_sort(transform(shingles,"
+        " x -> struct(md5(x) AS h, x AS s))), p -> p.s)"
+    )
+    return F.slice(by_hash, F.lit(1), length)
+
+
+def _verify_intersect(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, size_a, size_b) of candidate pairs, counted
+    exactly with ``array_intersect`` over the (doc_id, shingles) ``sets``."""
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("n_inter"),
+            F.size("sh_a").alias("size_a"),
+            F.size("sh_b").alias("size_b"),
+        )
+    )
+
+
+def prefix_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Exact Jaccard similarity join via PREFIX FILTERING (ppjoin-style):
+    same result set as :func:`jaccard_pairs`, far less shuffled volume.
+
+    A pair with J >= t MUST share at least one shingle within each side's
+    first ``|s| - ceil(t*|s|) + 1`` shingles under ANY fixed global shingle
+    order, so only prefix tokens enter the candidate equi-join; candidates
+    are then verified with an exact per-pair ``array_intersect`` —
+    lossless by construction.
+
+    The global order used is md5(shingle): order-by-hash makes prefix
+    selection a PURE PER-ROW array expression (sort the shingle array by
+    digest, slice the prefix — whole-stage codegen, zero shuffles, no
+    vocabulary pass), where the classic rarest-first df order would cost a
+    full posting-list aggregate + join before any pruning happened.
+    Hash order also de-correlates prefix membership from token frequency,
+    so hot shingles are diluted across prefixes instead of concentrated.
+
+    Scale posture: the only row-scale shuffle is the candidate equi-join
+    over ~(1-t) of each posting list; verification touches only surviving
+    pairs.
+    """
+    # persist, NOT localCheckpoint (measured r12: the checkpoint swap cost
+    # 2-3x — four consumers re-deserialize the heavy shingle-array rows
+    # from row-serialized checkpoint blocks, where the InMemoryRelation
+    # serves compressed COLUMNAR batches).  The pinned cache is released
+    # by the bench/differ's clearCache between queries.
+    sh = _shingle_sets(df, n, id_col, text_col).persist()
+    s = F.size("shingles")
+    prefix_len = (s - F.floor(F.lit(threshold) * s) + 1).cast("int")
+    prefix = sh.select("doc_id", F.explode(_md5_prefix(prefix_len)).alias("shingle"))
+    a, b = prefix.alias("a"), prefix.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    return _jaccard(_verify_intersect(cand, sh).where(F.col("n_inter") > 0), threshold)
+
+
+def containment_prefix_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Exact containment join via PREFIX FILTERING — the same pair set as
+    :func:`containment_pairs` up to threshold-boundary rounding (this
+    variant admits on the UNROUNDED containment, while containment_pairs
+    filters on the 6-digit-rounded value, so pairs sitting exactly on the
+    rounding boundary can differ between the two), at a fraction of the
+    shuffled volume.
+
+    max-containment(A, B) = |A∩B| / min(|A|, |B|) >= t requires the SMALLER
+    side S to have |S∩L| >= ceil(t·|S|), so at most |S| - ceil(t·|S|) =
+    p - 1 of S's shingles miss L — by pigeonhole ANY p = |S| - ceil(t·|S|)
+    + 1 shingles of S contain at least one hit.  Under the global md5 order
+    (as in :func:`prefix_jaccard_pairs`) only S's p-prefix joins against the
+    other side's FULL posting list; at t = 0.8 the prefix is ~20% of each
+    doc's shingles.  Candidates where the prefix side is not actually the
+    smaller side are discarded using carried sizes (the mirrored
+    orientation finds those pairs), then exact ``array_intersect``
+    verifies — lossless by construction.
+    """
+    # persist, NOT localCheckpoint: see prefix_jaccard_pairs (r12).
+    sh = _shingle_sets(df, n, id_col, text_col).persist()
+    s = F.size("shingles")
+    prefix_len = (s - F.ceil(F.lit(threshold) * s) + 1).cast("int")
+    prefix = sh.select(
+        F.col("doc_id").alias("p_doc"),
+        s.alias("p_size"),
+        F.explode(_md5_prefix(prefix_len)).alias("shingle"),
+    )
+    full = sh.select(
+        F.col("doc_id").alias("f_doc"),
+        s.alias("f_size"),
+        F.explode("shingles").alias("shingle"),
+    )
+    cand = (
+        prefix.join(full, "shingle")
+        .where(
+            (F.col("p_doc") != F.col("f_doc"))
+            # prefix side must be the smaller set (ties by id, so each
+            # unordered pair is generated by exactly one orientation)
+            & (
+                (F.col("p_size") < F.col("f_size"))
+                | (
+                    (F.col("p_size") == F.col("f_size"))
+                    & (F.col("p_doc") < F.col("f_doc"))
+                )
+            )
+        )
+        .select(
+            F.least("p_doc", "f_doc").alias("doc_a"),
+            F.greatest("p_doc", "f_doc").alias("doc_b"),
+        )
+        .distinct()
+    )
+    return (
+        _containment(_verify_intersect(cand, sh))
+        # UNROUNDED filter (n_inter >= t*min) so the admission criterion is
+        # exactly the pigeonhole bound the prefix was sized for — a rounded
+        # ratio could admit a pair the prefix never generated.
+        .where(
+            F.col("n_inter")
+            >= F.lit(threshold) * F.least("size_a", "size_b").cast("double")
+        )
+    )
+
+
+def resolve_jaccard_cap(
+    posting: DataFrame,
+    n_docs: int,
+    cap_frac: float,
+    cap_min: int,
+) -> tuple[str, int]:
+    """Pick the production cap regime from ONE cheap aggregate over the
+    postings: when the estimated mean shingle document-frequency already
+    exceeds the absolute floor ``cap_min``, the vocabulary is SATURATED
+    (corpus growth no longer mints new shingles — the fixture-vocab regime
+    of SCALE_PROBE_r08) and the fractional cap ``ceil(cap_frac*N)`` grows
+    with N, letting candidate pair volume scale Θ((cap_frac·N)²·|vocab|).
+    The right production setting there is the absolute cap.  On realistic
+    Heaps-law corpora mean df stays ~1-2 « cap_min and the fraction cap is
+    kept (value-identical to ``cap_mode='fraction'``).
+
+    Returns ``(mode, cap)`` with mode in {'fraction', 'absolute'}.  The
+    decision is deterministic: HLL distinct counts are partition-order
+    independent, and the two regimes are far apart at the switch point.
+    """
+    import math
+
+    stats = posting.agg(
+        F.count(F.lit(1)).alias("postings"),
+        F.approx_count_distinct("shingle").alias("vocab"),
+    ).collect()[0]
+    mean_df = stats["postings"] / max(int(stats["vocab"]), 1)
+    frac_cap = max(cap_min, math.ceil(cap_frac * n_docs))
+    if mean_df > cap_min:
+        return "absolute", cap_min
+    return "fraction", frac_cap
+
+
+def jaccard_pairs_capped(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+    cap_frac: float = 0.002,
+    cap_min: int = 5,
+    cap_mode: str = "fraction",
+) -> DataFrame:
+    """Frequency-capped n-gram Jaccard similarity join — the SCALE-SAFE
+    pair generator (hot-shingle mitigation as code, SCALE.md).
+
+    Shingles appearing in more than the cap documents (boilerplate, stop
+    phrases) are dropped consistently from EVERY document's set before
+    pair generation, so per-shingle pair work is bounded by cap² no matter
+    how hot the phrase.  ``cap_mode`` selects the cap regime:
+
+    - ``'fraction'`` (registry default, deterministic SQL-twin semantics):
+      ``cap = max(cap_min, ceil(cap_frac * N))`` — a document-frequency
+      FRACTION with a small-corpus floor.  Right for realistic Heaps-law
+      corpora where the vocabulary keeps growing with N.
+    - ``'absolute'``: ``cap = cap_min`` — per-shingle pair work is a
+      CONSTANT independent of N.  Right for saturated vocabularies where
+      the fraction cap's candidate volume scales Θ((cap_frac·N)²·|vocab|)
+      (SCALE_PROBE_r08's fixture-vocab regime).
+    - ``'auto'`` (the production default for unknown corpora): one cheap
+      aggregate estimates mean shingle df and switches fraction→absolute
+      when the typical shingle is already hotter than the absolute floor —
+      see :func:`resolve_jaccard_cap`.  Value-identical to ``'fraction'``
+      on unsaturated corpora.
+
+    Pair generation aggregates each cold shingle's ≤cap posting list and
+    expands i<j pairs locally — one shuffle of the postings, never a
+    posting self-join, and no broadcast of the (possibly huge at 100 TB)
+    hot set.
+
+    Semantics are deterministic (similarity over the capped sets, sizes
+    and intersections consistently capped), so results are value-exact
+    against a SQL twin.  This is the generator the connected-components
+    queries compose on: the naive :func:`jaccard_pairs` self-join OOMs at
+    x64 corpus scale in pair generation (SCALE_PROBE_r07), while this
+    form's shuffle volume is linear in posting size with a cap² local
+    expansion.  Returns (doc_a, doc_b, n_inter, size_a, size_b, jaccard)
+    with jaccard >= threshold over the capped sets.
+    """
+    posting = shingle_posting(df, n, id_col, text_col)
+    dfc = posting.groupBy("shingle").agg(
+        F.count(F.lit(1)).alias("df")  # postings are distinct per doc
+    )
+    if cap_mode == "auto":
+        _mode, cap_val = resolve_jaccard_cap(
+            posting, df.count(), cap_frac, cap_min
+        )
+        cap_row = None
+    elif cap_mode == "absolute":
+        cap_val = cap_min
+        cap_row = None
+    elif cap_mode == "fraction":
+        cap_val = None
+        cap_row = df.agg(
+            F.greatest(
+                F.lit(cap_min).cast("long"),
+                F.ceil(F.lit(cap_frac) * F.count(F.lit(1))),
+            ).alias("cap")
+        )
+    else:
+        raise ValueError(f"unknown cap_mode {cap_mode!r}")
+    # Two passes so no unbounded per-shingle state ever materializes: pass 1
+    # is a map-side-combinable df count; pass 2 keeps only cold shingles via
+    # a shuffle equi-join (NOT a broadcast — at 100 TB either side of the
+    # hot/cold split can exceed broadcast limits).
+    if cap_row is not None:
+        cold = (
+            dfc.crossJoin(F.broadcast(cap_row))
+            .where(F.col("df") <= F.col("cap"))
+            .select("shingle")
+        )
+    else:
+        cold = dfc.where(F.col("df") <= F.lit(cap_val)).select("shingle")
+    # Aggregate the cold posting lists IN THE SAME PLAN as the join: the
+    # join's shuffle on `shingle` is reused by the groupBy (no second
+    # corpus-scale exchange), and collect_list is bounded because hot
+    # shingles were already dropped (≤ cap entries per group).  Only the
+    # VOCAB-scale list table is materialized (localCheckpoint, not
+    # persist: blocks release when the plan is GC'd, so back-to-back
+    # invocations in a long-lived session don't accumulate pinned cache)
+    # — before r12 the corpus-scale postings were checkpointed instead
+    # and re-shuffled by shingle on the far side of the checkpoint, and
+    # per-doc sizes paid a second corpus-scale shuffle of (doc_id,
+    # shingle) rows; sizes now re-derive from the lists, so that shuffle
+    # carries bare doc_id longs (guide §2.3/§2.4).
+    lists = (
+        posting.join(cold, "shingle")
+        .groupBy("shingle")
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
+        .localCheckpoint(eager=True)
+    )
+    sizes = (
+        lists.select(F.explode("docs").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_shingles"))
+    )
+    # Cold posting lists are ≤ cap entries, so the i<j expansion is local
+    # per shingle — cap² pairs worst case.
+    pair_expand = F.expr(
+        "flatten(transform(docs, (a, i) -> "
+        "transform(slice(docs, i + 2, size(docs)), "
+        "b -> struct(a AS doc_a, b AS doc_b))))"
+    )
+    inter = (
+        lists.select(F.explode(pair_expand).alias("p"))
+        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    return _jaccard(_with_sizes(inter, sizes), threshold)
+
+
+# -- Connected components ------------------------------------------------------
 
 
 def connected_components(
@@ -470,188 +922,12 @@ def connected_components(
             labels = new_labels
             if changed == 0:
                 break
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
-def prefix_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard similarity join via PREFIX FILTERING (ppjoin-style):
-    same result set as :func:`jaccard_pairs`, far less shuffled volume.
-
-    A pair with J >= t MUST share at least one shingle within each side's
-    first ``|s| - ceil(t*|s|) + 1`` shingles under ANY fixed global shingle
-    order, so only prefix tokens enter the candidate equi-join; candidates
-    are then verified with an exact per-pair ``array_intersect`` —
-    lossless by construction.
-
-    The global order used is md5(shingle): order-by-hash makes prefix
-    selection a PURE PER-ROW array expression (sort the shingle array by
-    digest, slice the prefix — whole-stage codegen, zero shuffles, no
-    vocabulary pass), where the classic rarest-first df order would cost a
-    full posting-list aggregate + join before any pruning happened.
-    Hash order also de-correlates prefix membership from token frequency,
-    so hot shingles are diluted across prefixes instead of concentrated.
-
-    Scale posture: the only row-scale shuffle is the candidate equi-join
-    over ~(1-t) of each posting list; verification touches only surviving
-    pairs.
-    """
-    sh = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
-    )
-    # persist, NOT localCheckpoint (measured r12: the checkpoint swap cost
-    # 2-3x — four consumers re-deserialize the heavy shingle-array rows
-    # from row-serialized checkpoint blocks, where the InMemoryRelation
-    # serves compressed COLUMNAR batches).  The pinned cache is released
-    # by the bench/differ's clearCache between queries.
-    sh = sh.persist()
-
-    s = F.size("shingles")
-    prefix_len = (s - F.floor(F.lit(threshold) * s) + 1).cast("int")
-    # sort by (md5(shingle), shingle) structs -> take the lossless prefix,
-    # all inside codegen; no posting-list explode before the slice.
-    by_hash = F.expr(
-        "transform(array_sort(transform(shingles,"
-        " x -> struct(md5(x) AS h, x AS s))), p -> p.s)"
-    )
-    prefix = sh.select(
-        "doc_id",
-        F.explode(F.slice(by_hash, F.lit(1), prefix_len)).alias("shingle"),
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("n_inter"),
-            F.size("sh_a").alias("size_a"),
-            F.size("sh_b").alias("size_b"),
-        )
-        .where(F.col("n_inter") > 0)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified.select("doc_a", "doc_b", "n_inter", "size_a", "size_b", "jaccard")
-
-
-def containment_prefix_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact containment join via PREFIX FILTERING — the same pair set as
-    :func:`containment_pairs` up to threshold-boundary rounding (this
-    variant admits on the UNROUNDED containment, while containment_pairs
-    filters on the 6-digit-rounded value, so pairs sitting exactly on the
-    rounding boundary can differ between the two), at a fraction of the
-    shuffled volume.
-
-    max-containment(A, B) = |A∩B| / min(|A|, |B|) >= t requires the SMALLER
-    side S to have |S∩L| >= ceil(t·|S|), so at most |S| - ceil(t·|S|) =
-    p - 1 of S's shingles miss L — by pigeonhole ANY p = |S| - ceil(t·|S|)
-    + 1 shingles of S contain at least one hit.  Under a fixed global
-    order (md5, per-row codegen slice like the Jaccard prefix join) only
-    S's p-prefix joins against the other side's FULL posting list; at
-    t = 0.8 the prefix is ~20% of each doc's shingles.  Candidates where
-    the prefix side is not actually the smaller side are discarded using
-    carried sizes (the mirrored orientation finds those pairs), then
-    exact ``array_intersect`` verifies — lossless by construction.
-    """
-    sh = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
-    )
-    # persist, NOT localCheckpoint: see prefix_jaccard_pairs (r12).
-    sh = sh.persist()
-    s = F.size("shingles")
-    prefix_len = (s - F.ceil(F.lit(threshold) * s) + 1).cast("int")
-    by_hash = F.expr(
-        "transform(array_sort(transform(shingles,"
-        " x -> struct(md5(x) AS h, x AS s))), p -> p.s)"
-    )
-    prefix = sh.select(
-        F.col("doc_id").alias("p_doc"),
-        s.alias("p_size"),
-        F.explode(F.slice(by_hash, F.lit(1), prefix_len)).alias("shingle"),
-    )
-    full = sh.select(
-        F.col("doc_id").alias("f_doc"),
-        s.alias("f_size"),
-        F.explode("shingles").alias("shingle"),
-    )
-    cand = (
-        prefix.join(full, "shingle")
-        .where(
-            (F.col("p_doc") != F.col("f_doc"))
-            # prefix side must be the smaller set (ties by id, so each
-            # unordered pair is generated by exactly one orientation)
-            & (
-                (F.col("p_size") < F.col("f_size"))
-                | (
-                    (F.col("p_size") == F.col("f_size"))
-                    & (F.col("p_doc") < F.col("f_doc"))
-                )
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in max_iter={max_iter} "
+                "rounds; its labels would be wrong"
             )
-        )
-        .select(
-            F.least("p_doc", "f_doc").alias("doc_a"),
-            F.greatest("p_doc", "f_doc").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias("n_inter"),
-            F.size("sh_a").alias("size_a"),
-            F.size("sh_b").alias("size_b"),
-        )
-        .withColumn(
-            "cont_a", F.round(F.col("n_inter").cast("double") / F.col("size_a"), 6)
-        )
-        .withColumn(
-            "cont_b", F.round(F.col("n_inter").cast("double") / F.col("size_b"), 6)
-        )
-        # UNROUNDED filter (n_inter >= t*min) so the admission criterion is
-        # exactly the pigeonhole bound the prefix was sized for — a rounded
-        # ratio could admit a pair the prefix never generated.
-        .where(
-            F.col("n_inter")
-            >= F.lit(threshold) * F.least("size_a", "size_b").cast("double")
-        )
-        .select("doc_a", "doc_b", "n_inter", "size_a", "size_b", "cont_a", "cont_b")
-    )
+    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def connected_components_star(
@@ -776,6 +1052,11 @@ def connected_components_star(
                 ):
                     break
             old_fp = new_fp
+        else:
+            raise RuntimeError(
+                f"connected_components_star did not converge in "
+                f"max_iter={max_iter} rounds; its labels would be wrong"
+            )
     # converged: e is a star forest pointing at component minima
     roots = e.select(
         F.greatest("u", "v").alias("node"), F.least("u", "v").alias("label")
@@ -788,178 +1069,3 @@ def connected_components_star(
         )
     )
     return labels, rounds
-
-
-def resolve_jaccard_cap(
-    posting: DataFrame,
-    n_docs: int,
-    cap_frac: float,
-    cap_min: int,
-) -> tuple[str, int]:
-    """Pick the production cap regime from ONE cheap aggregate over the
-    postings: when the estimated mean shingle document-frequency already
-    exceeds the absolute floor ``cap_min``, the vocabulary is SATURATED
-    (corpus growth no longer mints new shingles — the fixture-vocab regime
-    of SCALE_PROBE_r08) and the fractional cap ``ceil(cap_frac*N)`` grows
-    with N, letting candidate pair volume scale Θ((cap_frac·N)²·|vocab|).
-    The right production setting there is the absolute cap.  On realistic
-    Heaps-law corpora mean df stays ~1-2 « cap_min and the fraction cap is
-    kept (value-identical to ``cap_mode='fraction'``).
-
-    Returns ``(mode, cap)`` with mode in {'fraction', 'absolute'}.  The
-    decision is deterministic: HLL distinct counts are partition-order
-    independent, and the two regimes are far apart at the switch point.
-    """
-    import math
-
-    stats = posting.agg(
-        F.count(F.lit(1)).alias("postings"),
-        F.approx_count_distinct("shingle").alias("vocab"),
-    ).collect()[0]
-    mean_df = stats["postings"] / max(int(stats["vocab"]), 1)
-    frac_cap = max(cap_min, math.ceil(cap_frac * n_docs))
-    if mean_df > cap_min:
-        return "absolute", cap_min
-    return "fraction", frac_cap
-
-
-def jaccard_pairs_capped(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    cap_frac: float = 0.002,
-    cap_min: int = 5,
-    cap_mode: str = "fraction",
-) -> DataFrame:
-    """Frequency-capped n-gram Jaccard similarity join — the SCALE-SAFE
-    pair generator (hot-shingle mitigation as code, SCALE.md).
-
-    Shingles appearing in more than the cap documents (boilerplate, stop
-    phrases) are dropped consistently from EVERY document's set before
-    pair generation, so per-shingle pair work is bounded by cap² no matter
-    how hot the phrase.  ``cap_mode`` selects the cap regime:
-
-    - ``'fraction'`` (registry default, deterministic SQL-twin semantics):
-      ``cap = max(cap_min, ceil(cap_frac * N))`` — a document-frequency
-      FRACTION with a small-corpus floor.  Right for realistic Heaps-law
-      corpora where the vocabulary keeps growing with N.
-    - ``'absolute'``: ``cap = cap_min`` — per-shingle pair work is a
-      CONSTANT independent of N.  Right for saturated vocabularies where
-      the fraction cap's candidate volume scales Θ((cap_frac·N)²·|vocab|)
-      (SCALE_PROBE_r08's fixture-vocab regime).
-    - ``'auto'`` (the production default for unknown corpora): one cheap
-      aggregate estimates mean shingle df and switches fraction→absolute
-      when the typical shingle is already hotter than the absolute floor —
-      see :func:`resolve_jaccard_cap`.  Value-identical to ``'fraction'``
-      on unsaturated corpora.
-
-    Pair generation aggregates each cold shingle's ≤cap posting list and
-    expands i<j pairs locally — one shuffle of the postings, never a
-    posting self-join, and no broadcast of the (possibly huge at 100 TB)
-    hot set.
-
-    Semantics are deterministic (similarity over the capped sets, sizes
-    and intersections consistently capped), so results are value-exact
-    against a SQL twin.  This is the generator the connected-components
-    queries compose on: the naive :func:`jaccard_pairs` self-join OOMs at
-    x64 corpus scale in pair generation (SCALE_PROBE_r07), while this
-    form's shuffle volume is linear in posting size with a cap² local
-    expansion.  Returns (doc_a, doc_b, n_inter, size_a, size_b, jaccard)
-    with jaccard >= threshold over the capped sets.
-    """
-    # explode the shingle EXPRESSION, not an aliased column: the aliased
-    # form lets InferFiltersFromGenerate push a `size(<full shingle
-    # expr>) > 0` filter below spread()'s Exchange, re-shingling the whole
-    # corpus on the ONE pre-repartition input partition (measured 10x on
-    # the posting materialization, r11 optimization round; the rule skips
-    # expensive generator inputs, SPARK-36715).
-    posting = spread(df, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(text_col, n)).alias("shingle"),
-    )
-    dfc = posting.groupBy("shingle").agg(
-        F.count(F.lit(1)).alias("df")  # postings are distinct per doc
-    )
-    if cap_mode == "auto":
-        _mode, cap_val = resolve_jaccard_cap(
-            posting, df.count(), cap_frac, cap_min
-        )
-        cap_row = None
-    elif cap_mode == "absolute":
-        cap_val = cap_min
-        cap_row = None
-    elif cap_mode == "fraction":
-        cap_val = None
-        cap_row = df.agg(
-            F.greatest(
-                F.lit(cap_min).cast("long"),
-                F.ceil(F.lit(cap_frac) * F.count(F.lit(1))),
-            ).alias("cap")
-        )
-    else:
-        raise ValueError(f"unknown cap_mode {cap_mode!r}")
-    # Two passes so no unbounded per-shingle state ever materializes: pass 1
-    # is a map-side-combinable df count; pass 2 keeps only cold shingles via
-    # a shuffle equi-join (NOT a broadcast — at 100 TB either side of the
-    # hot/cold split can exceed broadcast limits).
-    if cap_row is not None:
-        cold = (
-            dfc.crossJoin(F.broadcast(cap_row))
-            .where(F.col("df") <= F.col("cap"))
-            .select("shingle")
-        )
-    else:
-        cold = dfc.where(F.col("df") <= F.lit(cap_val)).select("shingle")
-    # Aggregate the cold posting lists IN THE SAME PLAN as the join: the
-    # join's shuffle on `shingle` is reused by the groupBy (no second
-    # corpus-scale exchange), and collect_list is bounded because hot
-    # shingles were already dropped (≤ cap entries per group).  Only the
-    # VOCAB-scale list table is materialized (localCheckpoint, not
-    # persist: blocks release when the plan is GC'd, so back-to-back
-    # invocations in a long-lived session don't accumulate pinned cache)
-    # — before r12 the corpus-scale postings were checkpointed instead
-    # and re-shuffled by shingle on the far side of the checkpoint, and
-    # per-doc sizes paid a second corpus-scale shuffle of (doc_id,
-    # shingle) rows; sizes now re-derive from the lists, so that shuffle
-    # carries bare doc_id longs (guide §2.3/§2.4).
-    lists = (
-        posting.join(cold, "shingle")
-        .groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .localCheckpoint(eager=True)
-    )
-    sizes = (
-        lists.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shingles"))
-    )
-    # Cold posting lists are ≤ cap entries, so the i<j expansion is local
-    # per shingle — cap² pairs worst case.
-    pair_expand = F.expr(
-        "flatten(transform(docs, (a, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), "
-        "b -> struct(a AS doc_a, b AS doc_b))))"
-    )
-    inter = (
-        lists.select(F.explode(pair_expand).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_inter", "size_a", "size_b", "jaccard")
-    )

@@ -21,7 +21,7 @@ Why this shape at 100 TB:
   intersection estimator).
 
 Hashing is md5-prefix fixed-point (deterministic across engines — same
-trick as the ANN md5 twins, queries/dedup_crossengine.py:40), so every
+trick as the md5 hash family, operators/text.py: md5_u32), so every
 number here is bit-reproducible in DuckDB SQL: these sketches are
 oracle-checkable EXACTLY, unlike approx_count_distinct's opaque HLL state.
 """

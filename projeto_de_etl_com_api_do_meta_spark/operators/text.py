@@ -173,45 +173,61 @@ def winnow_fingerprints(
     )
 
 
-# -- SimHash ------------------------------------------------------------------
+# -- Hashes ---------------------------------------------------------------
 
 
-def _token_bit_vec(tok: Column) -> Column:
-    """±1 vector of the 64 hash bits of a token (two 32-bit murmur halves)."""
-    h1 = F.hash(tok)
-    h2 = F.hash(tok, F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda b: F.when(
-            F.when(b < 32, F.getbit(h1.cast("long"), b))
-            .otherwise(F.getbit(h2.cast("long"), b - 32))
-            == 1,
-            F.lit(1),
-        ).otherwise(F.lit(-1)),
-    )
+def md5_u32(col: Column | str) -> Column:
+    """uint32 from the first 8 hex chars of md5 — the cross-engine hash:
+    DuckDB computes the same value as ``('0x'||substr(md5(x),1,8))::BIGINT``,
+    so every query hashing with it stays value-checkable."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def simhash64(text: Column | str) -> Column:
-    """64-bit SimHash of a document as a hex string.
+def _sign_fold(text: Column | str, width: int, bit) -> Column:
+    """SimHash sign bits of a document as a binary-digit string, MSB first.
 
-    Per-row, shuffle-free: fold the token list into a 64-long ±1 accumulator
-    with ``aggregate`` + ``zip_with``, then pack sign bits into a long.
-    """
-    toks = tokens(text)
+    Per-row, shuffle-free: fold the token list into a ``width``-long ±1
+    accumulator with ``aggregate`` + ``zip_with`` (``bit(token, b)`` is bit
+    ``b`` of the token's hash; token multiplicity counts).  The digit string
+    avoids 64-bit shift arithmetic limits in the expression DSL."""
     acc = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 64),
-        lambda a, t: F.zip_with(a, _token_bit_vec(t), lambda x, y: x + y),
+        tokens(text),
+        F.array_repeat(F.lit(0), width),
+        lambda a, t: F.zip_with(
+            a,
+            F.transform(
+                F.sequence(F.lit(0), F.lit(width - 1)),
+                lambda b: F.when(bit(t, b) == 1, F.lit(1)).otherwise(F.lit(-1)),
+            ),
+            lambda x, y: x + y,
+        ),
     )
-    # Pack sign bits into a hex string via a binary-digit string (MSB first);
-    # avoids 64-bit shift arithmetic limits in the expression DSL.
-    bit_str = F.array_join(
+    return F.array_join(
         F.reverse(
             F.transform(acc, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0")))
         ),
         "",
     )
-    return F.conv(bit_str, 2, 16)
+
+
+def _murmur_bit(tok: Column, b: Column) -> Column:
+    """Bit ``b`` of a token's 64-bit hash (two 32-bit murmur3 halves)."""
+    return F.when(b < 32, F.getbit(F.hash(tok).cast("long"), b)).otherwise(
+        F.getbit(F.hash(tok, F.lit(1)).cast("long"), b - 32)
+    )
+
+
+def simhash64(text: Column | str) -> Column:
+    """64-bit murmur3 SimHash of a document as a hex string."""
+    return F.conv(_sign_fold(text, 64, _murmur_bit), 2, 16)
+
+
+def simhash32_md5(text: Column | str) -> Column:
+    """32-bit md5-family SimHash packed into a long (bit ``b`` of
+    :func:`md5_u32` per token) — the value DuckDB's oracle computes."""
+    return F.conv(
+        _sign_fold(text, 32, lambda t, b: F.getbit(md5_u32(t), b)), 2, 10
+    ).cast("long")
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators.dedup import spread
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -429,11 +430,7 @@ def corpus_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bucket_expr(d_col, tok_col):
-        h = F.conv(
-            F.substring(F.md5(F.concat_ws(":", d_col.cast("string"), tok_col)), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        h = md5_u32(F.concat_ws(":", d_col.cast("string"), tok_col))
         return ((h % _CMS_W) + _CMS_W) % _CMS_W
 
     hashed = toks.select(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -451,8 +452,7 @@ def ml_cohen_kappa_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     ev = load_table(spark, sf_dir, "events")
     noise = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("event_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
 

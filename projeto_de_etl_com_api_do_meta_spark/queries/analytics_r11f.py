@@ -510,7 +510,7 @@ _CMS_PROBES = 10
 
 #: Shared hash text: uint32 of md5("<row>:<key>") mod w.  Spark's
 #: conv(substr(md5 ..),16,10) equals DuckDB's ('0x'||substr(..))::BIGINT
-#: (the dedup_crossengine._md5_u32 contract).
+#: (the ``operators/text.py: md5_u32`` contract).
 _CMS_BUCKET_SPARK = (
     "CAST(conv(substring(md5(concat(CAST(j AS STRING), ':',"
     " CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % {w}"

@@ -44,7 +44,7 @@ from .registry import register
 _HLL_M = 64  # 2^6 registers
 _HLL_ALPHA = 0.709  # alpha_64
 
-#: Shared hash text (the dedup_crossengine md5-u32 contract).
+#: Shared hash text (the ``operators/text.py: md5_u32`` contract).
 _HLL_H_SPARK = (
     "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)"
     " AS BIGINT)"

@@ -1,18 +1,15 @@
-"""Oracle-verifiable MinHash-LSH and SimHash (md5 hash family).
+"""Oracle-backed near-dup queries on the md5 hash family.
 
-The production dedup operators (operators/dedup.py) use murmur3 (``F.hash``)
-— the cheapest JVM-codegen hash — which no other engine reproduces, so their
-registry queries are rows-only.  These queries run the SAME pipeline shapes
-(shingle → k-min signature → banded equi-join → signature verify; token →
-±1 bit fold → pigeonhole blocks → Hamming verify) with an md5-derived hash
-family that DuckDB evaluates bit-identically, turning full MinHash+LSH and
-SimHash near-dup into value-checked contracts.
+The near-dup steps and both hash families live in ``operators/dedup.py``
+(the md5 family is ``MD5`` there, its LSH shape ``MD5_K`` / ``MD5_BANDS`` /
+``MD5_ROWS`` / ``MD5_MIN_MATCH``, its hash ``operators/text.py: md5_u32``).
+This module keeps only the queries that run them on the md5 family, which
+DuckDB evaluates bit-identically, so full MinHash+LSH and SimHash near-dup
+are value-checked contracts; the murmur3 twins in documents_queries are
+rows-only.
 
 Hash family: ``h_i(x) = uint32(first 8 hex chars of md5(i ':' x))`` — the
 same construction already used by ``embed_random_projection``'s ±1 matrix.
-md5 is ~2-4x slower per call than murmur3, which is why the murmur3 forms
-remain the headline/bench path; the shapes (and therefore the 100 TB
-posture: posting-list joins, never all-pairs) are identical.
 
 Determinism: every output column is an integer (ids, match counts, Hamming
 distances, packed fingerprints) — no floats cross the compare.
@@ -24,21 +21,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..operators.dedup import spread, word_shingles
-from ..operators.text import tokens
+from ..operators.dedup import (
+    MD5,
+    MD5_BANDS,
+    MD5_K,
+    MD5_MIN_MATCH,
+    MD5_ROWS,
+    jaccard_pairs,
+    match_signatures,
+    md5_lsh_pairs,
+    posting_signatures,
+    shingle_overlap,
+    shingle_posting,
+    simhash_near_dup,
+    spread,
+)
+from ..operators.text import simhash32_md5
 from ..session import pin_query_session_conf
 from .registry import register
-
-_K = 16  # minhash signature length
-_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
-_ROWS = _K // _BANDS
-_MIN_MATCH = 8  # est Jaccard >= 8/16 = 0.5
-
-
-def _md5_u32(col) -> F.Column:
-    """uint32 from the first 8 hex chars of md5 — same value as DuckDB's
-    ('0x' || substr(md5(x),1,8))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +57,7 @@ mh AS (
   SELECT doc_id, r.i AS hi,
          MIN(('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || s), 1, 8))::BIGINT)
            AS h
-  FROM sh, unnest(range(0, {_K})) AS r(i)
+  FROM sh, unnest(range(0, {MD5_K})) AS r(i)
   GROUP BY doc_id, r.i
 ),
 sig AS (
@@ -65,9 +65,9 @@ sig AS (
 ),
 band AS (
   SELECT doc_id, b.j AS band_id,
-         md5(array_to_string(sig[b.j * {_ROWS} + 1 : b.j * {_ROWS} + {_ROWS}],
+         md5(array_to_string(sig[b.j * {MD5_ROWS} + 1 : b.j * {MD5_ROWS} + {MD5_ROWS}],
                              ':')) AS bh
-  FROM sig, unnest(range(0, {_BANDS})) AS b(j)
+  FROM sig, unnest(range(0, {MD5_BANDS})) AS b(j)
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
@@ -76,67 +76,15 @@ cand AS (
               AND a.doc_id < b2.doc_id
 )
 SELECT c.doc_a, c.doc_b,
-       CAST(len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+       CAST(len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
             AS BIGINT) AS n_match
 FROM cand c
 JOIN sig sa ON sa.doc_id = c.doc_a
 JOIN sig sb ON sb.doc_id = c.doc_b
-WHERE len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
-      >= {_MIN_MATCH}
+WHERE len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+      >= {MD5_MIN_MATCH}
 ORDER BY doc_a, doc_b
 """
-
-
-def md5_lsh_signatures(
-    docs: DataFrame, posting: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, sig[16]) md5-family minhash signatures — the cross-engine
-    hash family shared by the batch near-dup query and the incremental
-    streaming suppressor (docs with <3 tokens have no shingles and are
-    absent from the result). Pass ``posting`` (doc_id, s shingle rows) to
-    reuse an already-shingled stream — shingling dominates per-row cost,
-    so callers that also need the exact side should shingle once."""
-    if posting is None:
-        # no size(tokens)>=3 pre-filter (r12): word_shingles already
-        # yields an EMPTY array below 3 tokens and explode drops empty
-        # arrays, so the filter selected exactly the rows the explode
-        # keeps while paying a second whole-corpus tokenization per row.
-        posting = (
-            spread(docs, "doc_id")
-            .select(
-                "doc_id", F.explode(word_shingles("text", 3)).alias("s")
-            )
-        )
-    mins = posting.groupBy("doc_id").agg(
-        *[
-            F.min(_md5_u32(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-            for i in range(_K)
-        ]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(_K)]).alias("sig")
-    )
-
-
-def md5_lsh_bands(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, bh) LSH band buckets from md5 signatures."""
-    return sig.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_BANDS - 1)),
-                lambda j: F.md5(
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col("sig"), j * _ROWS + 1, _ROWS),
-                            lambda v: v.cast("string"),
-                        ),
-                        ":",
-                    )
-                ),
-            )
-        ).alias("band_id", "bh"),
-    )
 
 
 @register(
@@ -152,53 +100,10 @@ def md5_lsh_bands(sig: DataFrame) -> DataFrame:
         "backed twin of the murmur3 dedup_minhash_lsh."
     ),
 )
-
 def dedup_minhash_md5_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
-    return md5_lsh_pairs(docs)
-
-
-def md5_lsh_pairs(
-    docs: DataFrame,
-    posting: DataFrame | None = None,
-    sort: bool = True,
-) -> DataFrame:
-    """(doc_a, doc_b, n_match) MinHash-LSH near-dup pairs, md5 family:
-    banded equi-join candidates verified by signature match >= 8/16.
-    ``posting`` reuses an already-shingled (doc_id, s) stream (see
-    md5_lsh_signatures); ``sort=False`` drops the presentation sort for
-    callers that immediately re-aggregate the pairs (a funnel stage
-    doesn't need a corpus-wide range-partition sort in the middle)."""
-    sig = md5_lsh_signatures(docs, posting=posting).persist()
-
-    banded = md5_lsh_bands(sig)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    n_match = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ).cast("long")
-    out = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_match.alias("n_match"))
-        .where(F.col("n_match") >= _MIN_MATCH)
-    )
-    return out.orderBy("doc_a", "doc_b") if sort else out
+    return md5_lsh_pairs(docs).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -225,34 +130,6 @@ FROM bits GROUP BY doc_id ORDER BY doc_id
 """
 
 
-def _simhash32_md5(text_col: str) -> F.Column:
-    """32-bit md5-family SimHash packed into a long — per-row fold, no
-    shuffle; token multiplicity counts (same as the murmur3 simhash64)."""
-    toks = tokens(text_col)
-    h = lambda t: _md5_u32(t)  # noqa: E731
-    acc = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 32),
-        lambda a, t: F.zip_with(
-            a,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(31)),
-                lambda b: F.when(F.getbit(h(t), b) == 1, F.lit(1)).otherwise(
-                    F.lit(-1)
-                ),
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    bit_str = F.array_join(
-        F.reverse(
-            F.transform(acc, lambda v: F.when(v > 0, F.lit("1")).otherwise(F.lit("0")))
-        ),
-        "",
-    )
-    return F.conv(bit_str, 2, 10).cast("long")
-
-
 @register(
     "dedup_simhash_md5",
     oracle=_ORACLE_SIMHASH,
@@ -269,7 +146,7 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         spread(docs, "doc_id")
-        .select("doc_id", _simhash32_md5("text").alias("fp"))
+        .select("doc_id", simhash32_md5("text").alias("fp"))
         .orderBy("doc_id")
     )
 
@@ -327,46 +204,7 @@ ORDER BY doc_a, doc_b
 def dedup_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
-    fp = (
-        spread(docs, "doc_id")
-        .select("doc_id", _simhash32_md5("text").alias("fp"))
-        .persist()
-    )
-    blocks = fp.select(
-        "doc_id",
-        "fp",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("fp"), j * 8).bitwiseAND(F.lit(255))
-                    for j in range(4)
-                ]
-            )
-        ).alias("block_id", "block_val"),
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block_id") == F.col("b.block_id"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("long")
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= 3)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
+    return simhash_near_dup(docs, family=MD5).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -399,24 +237,24 @@ mh AS (
   SELECT doc_id, r.i AS hi,
          MIN(('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || s), 1, 8))::BIGINT)
            AS h
-  FROM sh, unnest(range(0, {_K})) AS r(i)
+  FROM sh, unnest(range(0, {MD5_K})) AS r(i)
   GROUP BY doc_id, r.i
 ),
 sig AS (
   SELECT doc_id, list(h ORDER BY hi) AS sig FROM mh GROUP BY doc_id
 )
 SELECT p.doc_a, p.doc_b, CAST(p.n_inter AS BIGINT) AS n_inter, p.j_exact,
-       CAST(len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+       CAST(len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
             AS BIGINT) AS n_match,
-       round(len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
-             / {_K}.0, 6) AS j_est,
+       round(len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+             / {MD5_K}.0, 6) AS j_est,
        round(abs(round(CAST(p.n_inter AS DOUBLE)
                        / (SELECT sa2.sz + sb2.sz - p.n_inter
                           FROM sizes sa2, sizes sb2
                           WHERE sa2.doc_id = p.doc_a
                             AND sb2.doc_id = p.doc_b), 6)
-                 - len(list_filter(range(1, {_K} + 1),
-                                   k -> sa.sig[k] = sb.sig[k])) / {_K}.0),
+                 - len(list_filter(range(1, {MD5_K} + 1),
+                                   k -> sa.sig[k] = sb.sig[k])) / {MD5_K}.0),
              6) AS abs_err
 FROM pairs p
 JOIN sig sa ON sa.doc_id = p.doc_a
@@ -432,7 +270,7 @@ ORDER BY p.doc_a, p.doc_b
     tags=("dedup", "minhash", "eval", "north-star"),
     doc=(
         f"Sketch calibration: for every exact-Jaccard pair (J >= 0.3, "
-        f"trigram shingles), the {_K}-component md5-MinHash estimate "
+        f"trigram shingles), the {MD5_K}-component md5-MinHash estimate "
         "(matching-component fraction) next to the exact value and their "
         "absolute error — the measurement that tells you whether the "
         "signature length is adequate BEFORE trusting LSH at corpus "
@@ -445,65 +283,36 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     # persist so the exact side (sizes + self-join) and the signature
-    # aggregate physically share ONE shingling pass — an unpersisted df
-    # would recompute the dominant per-row cost once per consumer.  No
-    # size(tokens) >= 3 pre-filter: as in md5_lsh_signatures, explode
-    # already drops the empty shingle array of a doc below 3 tokens.
-    sh = spread(docs, "doc_id").select(
-        "doc_id", F.explode(word_shingles("text", 3)).alias("s")
-    ).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("size_b"))
+    # aggregate physically share ONE shingling pass — an unpersisted
+    # posting would recompute the dominant per-row cost once per consumer.
+    sh = shingle_posting(docs).persist()
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     union_sz = F.col("size_a") + F.col("size_b") - F.col("n_inter")
     pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        shingle_overlap(sh, sizes)
         .select(
             "doc_a",
             "doc_b",
-            F.col("n_inter").cast("long").alias("n_inter"),
+            "n_inter",
             F.round(F.col("n_inter").cast("double") / union_sz, 6).alias(
                 "j_exact"
             ),
         )
         .where(F.col("j_exact") >= 0.3)
     )
-    sig = md5_lsh_signatures(docs, posting=sh)  # shingle once, use twice
-    siga = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sigb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    n_match = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    ).cast("long")
+    sig = posting_signatures(sh, MD5_K, MD5)  # shingle once, use twice
+    j_est = F.col("n_match") / F.lit(float(MD5_K))
     return (
-        pairs.join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .withColumn("n_match", n_match)
+        match_signatures(pairs, sig)
+        .withColumn("n_match", F.col("n_match").cast("long"))
         .select(
             "doc_a",
             "doc_b",
             "n_inter",
             "j_exact",
             "n_match",
-            F.round(F.col("n_match") / F.lit(float(_K)), 6).alias("j_est"),
-            F.round(
-                F.abs(F.col("j_exact") - F.col("n_match") / F.lit(float(_K))),
-                6,
-            ).alias("abs_err"),
+            F.round(j_est, 6).alias("j_est"),
+            F.round(F.abs(F.col("j_exact") - j_est), 6).alias("abs_err"),
         )
         .orderBy("doc_a", "doc_b")
     )
@@ -552,7 +361,7 @@ mh AS (
   SELECT doc_id, r.i AS hi,
          MIN(('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || s), 1, 8))::BIGINT)
            AS h
-  FROM sh, unnest(range(0, {_K})) AS r(i)
+  FROM sh, unnest(range(0, {MD5_K})) AS r(i)
   GROUP BY doc_id, r.i
 ),
 sig AS (
@@ -560,9 +369,9 @@ sig AS (
 ),
 band AS (
   SELECT doc_id, b.j AS band_id,
-         md5(array_to_string(sig[b.j * {_ROWS} + 1 : b.j * {_ROWS} + {_ROWS}],
+         md5(array_to_string(sig[b.j * {MD5_ROWS} + 1 : b.j * {MD5_ROWS} + {MD5_ROWS}],
                              ':')) AS bh
-  FROM sig, unnest(range(0, {_BANDS})) AS b(j)
+  FROM sig, unnest(range(0, {MD5_BANDS})) AS b(j)
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
@@ -575,8 +384,8 @@ lsh AS (
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.doc_a
   JOIN sig sb ON sb.doc_id = c.doc_b
-  WHERE len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
-        >= {_MIN_MATCH}
+  WHERE len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+        >= {MD5_MIN_MATCH}
 )
 SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
        (SELECT COUNT(*) FROM lsh) AS n_detected,
@@ -607,8 +416,6 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
     ),
 )
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import jaccard_pairs
-
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     truth = jaccard_pairs(docs, threshold=0.5).select("doc_a", "doc_b")

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -41,8 +42,7 @@ _NOISE_SQL = "((('0x' || substr(md5(CAST({id} AS VARCHAR)), 1, 8))::BIGINT % 100
 
 def _noise(id_col: str) -> F.Column:
     return (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col(id_col).cast("string"))
         % 1000
     ) / F.lit(999.0)
 

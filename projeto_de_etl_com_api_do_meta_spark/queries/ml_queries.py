@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -1461,8 +1462,7 @@ def ml_calibration_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(
@@ -1566,8 +1566,7 @@ def ml_auc_roc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(
@@ -1863,8 +1862,7 @@ def ml_gains_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(
@@ -1992,8 +1990,7 @@ def ml_gains_lift_table_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(
@@ -2125,8 +2122,7 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(

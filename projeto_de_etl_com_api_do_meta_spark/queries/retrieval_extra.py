@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators.dedup import spread
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -301,7 +302,7 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "is_target",
         (
-            (F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long") % b + b)
+            (md5_u32("tok") % b + b)
             % b
         ).alias("bucket"),
     )

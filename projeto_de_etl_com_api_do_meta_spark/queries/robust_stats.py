@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -341,19 +342,7 @@ ORDER BY ks.k
 def agg_quantile_sketch_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     li = load_table(spark, sf_dir, "lineitem")
-    lane = F.conv(
-        F.substring(
-            F.md5(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast(
-                    "string"
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    lane = md5_u32((F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("string"))
     base = li.select(
         F.round(F.col("l_extendedprice") * 100.0, 0)
         .cast("bigint")
@@ -909,9 +898,7 @@ def sample_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = spark.createDataFrame(
         [(t, k) for t, k in sorted(_HT_RATES.items())], "event_type string, k int"
     )
-    lane = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
+    lane = md5_u32(F.col("event_id").cast("string"))
     base = ev.join(F.broadcast(rates), "event_type").select(
         "event_type",
         "k",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -551,11 +552,9 @@ def ml_ransac_line_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x", "y", F.row_number().over(w_idx).cast("bigint").alias("idx")
     )
     ks = spark.range(0, _RANSAC_K).select(F.col("id").alias("k"))
-    lane = lambda tag: F.conv(  # noqa: E731
-        F.substring(F.md5(F.concat(F.col("k").cast("string"), F.lit(tag))), 1, 8),
-        16,
-        10,
-    ).cast("long")
+    lane = lambda tag: md5_u32(  # noqa: E731
+        F.concat(F.col("k").cast("string"), F.lit(tag))
+    )
     n_row = daily.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     # n > 0 guard: on an empty series the oracle's spine x points cross
     # join is empty, so the Spark side must not evaluate lane % 0 either.

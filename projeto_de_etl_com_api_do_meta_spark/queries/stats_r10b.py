@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -379,8 +380,7 @@ def ml_youden_j_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     noise = (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("vec_id").cast("string"))
         % 1000
     ) / F.lit(999.0)
     scored = emb.select(

@@ -24,7 +24,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..operators.dedup import spread
+from ..operators.dedup import (
+    MD5,
+    MD5_BANDS,
+    MD5_K,
+    MD5_MIN_MATCH,
+    MD5_ROWS,
+    lsh_bands,
+    minhash_signatures,
+    signature_matches,
+    spread,
+)
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -481,7 +492,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
     )
     bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+        md5_u32("tok")
         % _FH_BUCKETS
         + _FH_BUCKETS
     ) % _FH_BUCKETS
@@ -875,12 +886,10 @@ ORDER BY c.doc_id, c.eval_doc_id
     ),
 )
 def text_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_crossengine import md5_lsh_bands, md5_lsh_signatures
-
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
-    sig = md5_lsh_signatures(docs).persist()
-    bands = md5_lsh_bands(sig)
+    sig = minhash_signatures(docs, num_hashes=MD5_K, family=MD5).persist()
+    bands = lsh_bands(sig, MD5_BANDS, MD5_ROWS, MD5)
     tr = bands.where(F.col("doc_id") % 20 != 0)
     ev = bands.where(F.col("doc_id") % 20 == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "band_id", "bh"
@@ -894,17 +903,12 @@ def text_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = sig.select(
         F.col("doc_id").alias("eval_doc_id"), F.col("sig").alias("sig_e")
     )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("sig_t", "sig_e", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ).cast("long")
+    n_match = signature_matches("sig_t", "sig_e").cast("long")
     return (
         cand.join(st, "doc_id")
         .join(F.broadcast(se), "eval_doc_id")
         .select("doc_id", "eval_doc_id", n_match.alias("n_match"))
-        .where(F.col("n_match") >= 8)
+        .where(F.col("n_match") >= MD5_MIN_MATCH)
         .orderBy("doc_id", "eval_doc_id")
     )
 
@@ -1285,8 +1289,6 @@ ORDER BY bt.doc_id
     ),
 )
 def text_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup_crossengine import _md5_u32
-
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents").where(
         F.length(F.trim("text")) > 0
@@ -1302,7 +1304,7 @@ def text_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFram
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("tok"),
     )
     bt = toks.select(
-        "doc_id", (_md5_u32(F.col("tok")) % _CLS_BUCKETS).alias("bucket")
+        "doc_id", (md5_u32(F.col("tok")) % _CLS_BUCKETS).alias("bucket")
     )
     return (
         bt.join(F.broadcast(weights), "bucket")
@@ -2066,7 +2068,7 @@ def ml_classifier_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bt = toks.select(
         "doc_id",
         (
-            F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+            md5_u32("tok")
             % _CLS_BUCKETS
         ).alias("bucket"),
     ).groupBy("doc_id", "bucket").agg(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf, stream_state_width
 from ..streaming.windows import (
     clicks_purchases_join,
@@ -63,8 +64,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("doc_id").cast("string"))
         % 100
     )
     return docs.select(
@@ -278,8 +278,7 @@ def sample_stratified_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("doc_id").cast("string"))
         % 10000
     )
     keep = bucket < F.when(F.col("lang") == "en", 2500).otherwise(10000)
@@ -462,15 +461,7 @@ def sample_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":mix"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_u32(F.concat(F.col("doc_id").cast("string"), F.lit(":mix")))
         % 10000
     )
     srcnum = F.expr("try_cast(replace(source, 'src', '') AS BIGINT)")
@@ -848,8 +839,7 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = docs.select("doc_id", tokens("text").alias("w"))
     u_bp = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
+        md5_u32(F.col("doc_id").cast("string"))
         % 10000
     )
     scored = d.select(
@@ -965,21 +955,13 @@ def train_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.col("sample_j").cast("long").alias("sample_j"),
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":",
-                                F.col("user_id").cast("string"),
-                                F.col("sample_j").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                md5_u32(
+                    F.concat_ws(
+                        ":",
+                        F.col("user_id").cast("string"),
+                        F.col("sample_j").cast("string"),
+                    )
+                )
                 % F.col("n_items")
             ).alias("idx"),
         )
@@ -1089,9 +1071,7 @@ def train_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("group_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
+        md5_u32(F.col("group_id").cast("string"))
         % 100
     )
     return g.select(
@@ -1190,15 +1170,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rate_bp"),
     )
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":temp"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_u32(F.concat(F.col("doc_id").cast("string"), F.lit(":temp")))
         % 10000
     )
     kept = (
@@ -1222,7 +1194,7 @@ def corpus_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_funnel() -> str:
-    from .dedup_crossengine import _BANDS, _K, _MIN_MATCH, _ROWS
+    from ..operators.dedup import MD5_BANDS, MD5_K, MD5_MIN_MATCH, MD5_ROWS
     from .text_cleaning import (
         _GOPHER_MAX_MWL_BP,
         _GOPHER_MAX_WORDS,
@@ -1264,15 +1236,15 @@ mh AS (
   SELECT doc_id, r.i AS hi,
          MIN(('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || s), 1, 8))::BIGINT)
            AS h
-  FROM sh2, unnest(range(0, {_K})) AS r(i)
+  FROM sh2, unnest(range(0, {MD5_K})) AS r(i)
   GROUP BY doc_id, r.i
 ),
 sig AS (SELECT doc_id, list(h ORDER BY hi) AS sig FROM mh GROUP BY doc_id),
 band AS (
   SELECT doc_id, b.j AS band_id,
-         md5(array_to_string(sig[b.j * {_ROWS} + 1 : b.j * {_ROWS} + {_ROWS}],
+         md5(array_to_string(sig[b.j * {MD5_ROWS} + 1 : b.j * {MD5_ROWS} + {MD5_ROWS}],
                              ':')) AS bh
-  FROM sig, unnest(range(0, {_BANDS})) AS b(j)
+  FROM sig, unnest(range(0, {MD5_BANDS})) AS b(j)
 ),
 dup AS (
   SELECT DISTINCT b2.doc_id
@@ -1281,8 +1253,8 @@ dup AS (
               AND a.doc_id < b2.doc_id
   JOIN sig sa ON sa.doc_id = a.doc_id
   JOIN sig sb ON sb.doc_id = b2.doc_id
-  WHERE len(list_filter(range(1, {_K} + 1), k -> sa.sig[k] = sb.sig[k]))
-        >= {_MIN_MATCH}
+  WHERE len(list_filter(range(1, {MD5_K} + 1), k -> sa.sig[k] = sb.sig[k]))
+        >= {MD5_MIN_MATCH}
 ),
 k3 AS (SELECT doc_id FROM k2
        WHERE doc_id NOT IN (SELECT doc_id FROM dup)),
@@ -1352,8 +1324,7 @@ _FUNNEL_STAGES = (
     ),
 )
 def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import spread, word_shingles
-    from .dedup_crossengine import md5_lsh_pairs
+    from ..operators.dedup import md5_lsh_pairs, shingle_posting
     from .text_cleaning import gopher_metrics
 
     pin_query_session_conf(spark)
@@ -1383,12 +1354,10 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each stage re-shingles its own (shrinking) slice rather than sharing
     # one persisted corpus-wide posting: measured, materializing the
     # exploded 200x posting costs more than re-running the codegen'd
-    # tokenize+slide fused into each stage's scan. sort=False drops
-    # md5_lsh_pairs' presentation sort — the pairs feed straight into a
-    # re-aggregating distinct, so a corpus-wide range sort mid-funnel is
-    # pure overhead.
+    # tokenize+slide fused into each stage's scan. md5_lsh_pairs is
+    # unsorted — the pairs feed straight into a re-aggregating distinct.
     dup_ids = (
-        md5_lsh_pairs(k2, sort=False)
+        md5_lsh_pairs(k2)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -1402,25 +1371,20 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no size(tokens)>=3 pre-filter: explode of the (empty-below-3-tokens)
     # shingle array keeps exactly the same rows without a second per-row
     # tokenization (r12; same in ev_sh and the SFT funnel).
-    tr_sh = (
-        spread(docs.join(k3_ids, "doc_id"), "doc_id")
-        .select("doc_id", F.explode(word_shingles("text", 3)).alias("s"))
-    )
+    tr_sh = shingle_posting(docs.join(k3_ids, "doc_id"))
     ev_sh = (
-        spread(docs.where(F.col("doc_id") % 20 == 0), "doc_id")
-        .select(F.explode(word_shingles("text", 3)).alias("s"))
+        shingle_posting(docs.where(F.col("doc_id") % 20 == 0))
+        .select("shingle")
         .distinct()
     )
-    cont_ids = tr_sh.join(ev_sh, "s").select("doc_id").distinct()
+    cont_ids = tr_sh.join(ev_sh, "shingle").select("doc_id").distinct()
     k4_ids = (
         k3_ids.where(F.col("doc_id") % 20 != 0)
         .join(cont_ids, "doc_id", "left_anti")
         .localCheckpoint(eager=True)
     )
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
+        md5_u32(F.col("doc_id").cast("string"))
         % 100
     )
     k5_ids = k4_ids.where(bucket < 80)
@@ -1819,7 +1783,7 @@ ORDER BY stage
     ),
 )
 def pipeline_sft_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import spread, word_shingles
+    from ..operators.dedup import shingle_posting
 
     pin_query_session_conf(spark)
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1843,16 +1807,13 @@ def pipeline_sft_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # no .distinct(): (doc_id, s) is already unique (array_distinct per
     # doc, unique doc_id) — see pipeline_training_funnel (r12).
-    tr_sh = (
-        spread(gated.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.explode(word_shingles("text", 8)).alias("s"))
-    )
+    tr_sh = shingle_posting(gated.select("doc_id", "text"), n=8)
     ev_sh = (
-        spread(docs.where(F.col("doc_id") % 20 == 0), "doc_id")
-        .select(F.explode(word_shingles("text", 8)).alias("s"))
+        shingle_posting(docs.where(F.col("doc_id") % 20 == 0), n=8)
+        .select("shingle")
         .distinct()
     )
-    cont_ids = tr_sh.join(ev_sh, "s").select("doc_id").distinct()
+    cont_ids = tr_sh.join(ev_sh, "shingle").select("doc_id").distinct()
     clean = (
         gated.where(F.col("doc_id") % 20 != 0)
         .join(cont_ids, "doc_id", "left_anti")

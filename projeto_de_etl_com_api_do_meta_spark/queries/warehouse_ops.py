@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.safe_math import dec
 from ..io import load_table
+from ..operators.text import md5_u32
 from ..session import pin_query_session_conf
 from .registry import register
 
@@ -1870,7 +1871,7 @@ def io_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = payloads.withColumnRenamed("payload", "orig").join(back, "doc_id")
     checksum = (
-        F.conv(F.substring(F.md5("orig"), 1, 8), 16, 10).cast("long")
+        md5_u32("orig")
     )
     return joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -2051,7 +2052,7 @@ def io_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(target)
     )
     joined = payloads.withColumnRenamed("payload", "orig").join(back, "doc_id")
-    checksum = F.conv(F.substring(F.md5("orig"), 1, 8), 16, 10).cast("long")
+    checksum = md5_u32("orig")
     return joined.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum(F.when(F.col("orig") == F.col("payload"), 1).otherwise(0))

@@ -7,10 +7,14 @@ Shapes mirror the reference's raw frames (extract.py:70-82,116-136,177-229):
 string ids, numeric-as-string metrics with ~2% junk, dotted action types,
 duplicate keys with partial nulls (to exercise groupby().first()), duplicate
 ad ids (keep-last dedup), null structs (null-safe extraction).
+
+Each generator is memoized: it is deterministic, so one process builds each
+edge once.  Callers share the returned rows and must not mutate them.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import random
 import zlib
@@ -72,6 +76,7 @@ def _actions(rng: random.Random):
     ]
 
 
+@functools.cache
 def gen_insights(breakdown: tuple[str, ...] = ()) -> list[dict]:
     """Raw insight rows for the given breakdown combo (A1/A2/A3)."""
     rng = random.Random(42 + len(breakdown))
@@ -116,6 +121,7 @@ def gen_insights(breakdown: tuple[str, ...] = ()) -> list[dict]:
     return rows
 
 
+@functools.cache
 def gen_ads() -> list[dict]:
     """Raw ads entity rows (A4): dup ids w/ different names, null structs."""
     rng = random.Random(4242)
@@ -142,10 +148,12 @@ def gen_ads() -> list[dict]:
     return rows
 
 
+@functools.cache
 def gen_forms() -> list[dict]:
     return [{"id": f"45{i:013d}"} for i in range(5)]
 
 
+@functools.cache
 def gen_leads(form_id: str) -> list[dict]:
     """Raw leads for one form (A5) — the correlated inner scan."""
     # crc32, not hash(): Python string hashing is salted per process

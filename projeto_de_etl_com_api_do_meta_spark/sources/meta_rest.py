@@ -47,16 +47,11 @@ from . import meta_fixtures
 
 class FakeMetaTransport:
     """Deterministic in-memory stand-in for the Meta Graph API: paginated
-    edge reads with server-side fields/filtering/time_range/breakdowns."""
+    edge reads with server-side fields/filtering/time_range/breakdowns.
 
-    def __init__(self) -> None:
-        self._insights = {
-            (): meta_fixtures.gen_insights(()),
-            ("age", "gender"): meta_fixtures.gen_insights(("age", "gender")),
-            ("region",): meta_fixtures.gen_insights(("region",)),
-        }
-        self._ads = meta_fixtures.gen_ads()
-        self._forms = meta_fixtures.gen_forms()
+    Each edge's rows are generated on first use by the (memoized)
+    ``meta_fixtures`` generators, so a transport reads only the edges it is
+    asked for and keeps no fixture state of its own."""
 
     @staticmethod
     def _paginate(rows: list[dict], limit: int) -> Iterator[list[dict]]:
@@ -64,7 +59,7 @@ class FakeMetaTransport:
             yield rows[page * limit : (page + 1) * limit]
 
     def get_ads(self, fields: list[str], params: dict) -> Iterator[list[dict]]:
-        rows = self._ads
+        rows = meta_fixtures.gen_ads()
         for flt in params.get("filtering", []):
             if flt.get("operator") == "IN":
                 field, allowed = flt["field"].split(".")[-1], set(flt["value"])
@@ -74,7 +69,9 @@ class FakeMetaTransport:
 
     def get_insights(self, fields: list[str], params: dict) -> Iterator[list[dict]]:
         breakdowns = tuple(params.get("breakdowns", []))
-        rows = self._insights[breakdowns]
+        if breakdowns not in INSIGHTS_SCHEMAS:
+            raise KeyError(breakdowns)
+        rows = meta_fixtures.gen_insights(breakdowns)
         tr = params.get("time_range")
         if tr:
             rows = [
@@ -87,7 +84,7 @@ class FakeMetaTransport:
         return self._paginate(rows, params.get("limit", 1000))
 
     def get_lead_gen_forms(self, fields: list[str], params: dict) -> Iterator[list[dict]]:
-        return self._paginate(list(self._forms), params.get("limit", 100))
+        return self._paginate(meta_fixtures.gen_forms(), params.get("limit", 100))
 
     def get_leads(self, form_id: str, fields: list[str], params: dict) -> Iterator[list[dict]]:
         rows = meta_fixtures.gen_leads(form_id)

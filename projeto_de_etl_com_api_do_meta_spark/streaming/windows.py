@@ -622,7 +622,14 @@ def incremental_neardup_suppress(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..queries.dedup_crossengine import md5_lsh_bands, md5_lsh_signatures
+    from ..operators.dedup import (
+        MD5,
+        MD5_BANDS,
+        MD5_K,
+        MD5_ROWS,
+        lsh_bands,
+        minhash_signatures,
+    )
     from ..sinks.upsert import recover_dir
 
     docs_schema = (
@@ -637,7 +644,8 @@ def incremental_neardup_suppress(
     def _suppress(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bands = md5_lsh_bands(md5_lsh_signatures(batch_df)).persist()
+        sigs = minhash_signatures(batch_df, num_hashes=MD5_K, family=MD5)
+        bands = lsh_bands(sigs, MD5_BANDS, MD5_ROWS, MD5).persist()
         # Within-batch suppressor: smallest doc_id in each bucket.
         w = Window.partitionBy("band_id", "bh")
         intra = bands.withColumn("bucket_min", F.min("doc_id").over(w))

@@ -10,6 +10,7 @@ from projeto_de_etl_com_api_do_meta_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_near_dup,
     minhash_signatures,
+    shingle_posting,
     word_shingles,
 )
 
@@ -36,6 +37,39 @@ def test_word_shingles(spark):
 def test_word_shingles_short_doc_empty(spark):
     df = _docs(spark, [(1, "a b")])
     assert df.select(word_shingles("text", 3).alias("s")).first().s == []
+
+
+def test_shingle_posting_plan_shingles_once(spark):
+    """The posting explodes the shingle expression itself: exploding an
+    aliased column lets InferFiltersFromGenerate push a second and third
+    copy of the shingle expression below the repartition exchange, which
+    shingles the whole corpus again on its unsplit input."""
+    df = _docs(spark, [(1, "a b c d"), (2, "b c d e")])
+    posting = shingle_posting(df)
+    plan = posting._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_distinct(") == 1, plan
+    assert sorted(map(tuple, posting.collect())) == [
+        (1, "a b c"), (1, "b c d"), (2, "b c d"), (2, "c d e")
+    ]
+
+
+def test_connected_components_raise_when_rounds_run_out(spark):
+    """A chain longer than the round budget must fail loudly: labels from
+    an unconverged last round are wrong."""
+    import pytest
+
+    from projeto_de_etl_com_api_do_meta_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(chain, max_iter=3)
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components_star(chain, max_iter=2)
 
 
 def test_jaccard_pairs_hand_computed(spark):

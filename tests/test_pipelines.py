@@ -185,3 +185,16 @@ def test_source_sends_the_transport_the_same_calls(spark, tmp_path):
         + [["get_leads", f, leads, {"limit": 100, "time_range": tr}] for f in forms],
         key=json.dumps,
     )
+
+
+def test_fake_transport_generates_only_the_edge_it_reads(monkeypatch):
+    """Reading the ads edge builds no insights fixture: each edge is
+    generated on first use, not when the transport is constructed."""
+    calls = []
+    real = meta_fixtures.gen_insights
+    monkeypatch.setattr(
+        meta_fixtures, "gen_insights", lambda *a: calls.append(a) or real(*a)
+    )
+    pages = list(FakeMetaTransport().get_ads(["id"], {"limit": 25}))
+    assert sum(map(len, pages)) == 70
+    assert calls == []
